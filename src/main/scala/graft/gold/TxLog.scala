@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    metadata is O(changed files), not O(table files) — at 10⁵–10⁶ files
   *    a 1-row append must not write tens of MB of metadata. Every
   *    [[CheckpointInterval]] commits a full-file-list CHECKPOINT file
-  *    (`<v>.checkpoint.json`) is written alongside; [[snapshot]] resolves
+  *    (`<v>.checkpoint.parquet`) is written alongside; [[snapshot]] resolves
   *    newest-checkpoint-≤-v and replays only the tail, so read-side log
   *    cost is O(commits since checkpoint) too. Checkpoints written at
   *    commit time are advisory (corrupt/missing → longer replay, same
@@ -43,17 +43,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    or below the appId's recorded watermark, which is the exactly-once
   *    seam a streaming `foreachBatch` sink needs under at-least-once
   *    redelivery. The accumulated map rides in every [[Snapshot]] and is
-  *    persisted by BOTH checkpoint kinds, so it survives vacuum dropping
-  *    the action history.
-  *  - **Schema in the log**: every version record carries the table schema
-  *    known at that commit (base schema widened by the written data's
-  *    schema — Delta stores table metadata in the log for the same
-  *    reason), so a version whose file list is EMPTY (delete-all — a legal
-  *    SQL state) reads as a schema-correct empty DataFrame instead of
-  *    erroring. When files exist, the schema authority for the read stays
-  *    parquet footer merging (`mergeSchema`) — time travel below a
-  *    widening append serves the files' own narrower schema; the recorded
-  *    schema is the authority ONLY for file-less versions.
+  *    persisted by every checkpoint, so it survives vacuum dropping the
+  *    action history.
+  *  - **Schema in the log**: every version record and every checkpoint
+  *    carries the table schema known at that commit (base schema widened
+  *    by the written data's schema — Delta stores table metadata in the
+  *    log for the same reason). The recorded schema is the ONLY schema
+  *    authority: every read serves a version's files through its recorded
+  *    schema explicitly (no parquet footer merging), so time travel below
+  *    a widening append serves that version's narrower schema, and a
+  *    version whose file list is EMPTY (delete-all — a legal SQL state)
+  *    reads as a schema-correct empty DataFrame.
+  *  - **One log format**: every version record and checkpoint is stamped
+  *    with [[LogProtocol]]; a record or checkpoint without that stamp was
+  *    written by an older log format and is refused with one named error
+  *    ([[OlderLogFormatException]]: re-create the table) — no read path
+  *    guesses at an older shape.
   *  - **DELETE without eager rewrite of everything**: `deleteWhere` rewrites
   *    ONLY the files that contain matching rows. Touched-file discovery is
   *    ONE distributed job over all candidate files (`input_file_name()`
@@ -114,18 +119,37 @@ object TxLog {
 
   private val CheckpointName = "_last_checkpoint"
 
+  /** The log-format stamp [[publish]] writes into every version record
+    * and [[writeCheckpointParquet]] into every checkpoint's meta row. A
+    * record or checkpoint carrying no stamp, or a different one, was
+    * written by an older log format: reads refuse it with
+    * [[OlderLogFormatException]] instead of guessing at its shape.
+    */
+  val LogProtocol = 1
+
+  final class OlderLogFormatException(path: String)
+    extends IllegalStateException(s"TxLog: $path was written by an older " +
+      "log format - re-create the table")
+
+  private val ProtocolRe = "\"protocol\"\\s*:\\s*(-?\\d+)".r
+
+  /** Refuse `text` (a version record or checkpoint meta row of the table
+    * at `path`) unless it carries exactly [[LogProtocol]].
+    */
+  private def requireProtocol(path: String, text: String): Unit =
+    if (!ProtocolRe.findFirstMatchIn(text).exists(_.group(1) == LogProtocol.toString))
+      throw new OlderLogFormatException(path)
+
   /** Exactly the names [[publish]] writes — editor droppings, temp files,
     * checkpoint files, and the checkpoint hint in the log dir are ignored,
     * never parsed as version records.
     */
   private val VersionRe = "^(\\d{20})\\.json$".r
 
-  private val CheckpointFileRe = "^(\\d{20})\\.checkpoint\\.json$".r
-
   private val CheckpointParquetRe = "^(\\d{20})\\.checkpoint\\.parquet$".r
 
   final case class Snapshot(version: Long, files: Seq[String],
-      schema: Option[StructType] = None,
+      schema: StructType,
       txns: Map[String, Long] = Map.empty,
       constraints: Map[String, String] = Map.empty,
       stats: Map[String, FileStats] = Map.empty,
@@ -191,8 +215,10 @@ object TxLog {
     * read it as pure log metadata — zero filesystem stats, correct on any
     * filesystem (a `java.io.File.length()` on a non-local FS returns 0
     * SILENTLY, which was the round-12 latent bug this field retires).
-    * None only on legacy pre-size records — consumers fall back to one
-    * Hadoop-FS stat per uncovered file ([[fileBytes]]).
+    * Every committer records it. A file with no FileStats entry at all —
+    * a table with no stats-eligible column commits stat-less records —
+    * has no recorded size, and size consumers pay one Hadoop-FS stat per
+    * such file ([[fileBytes]]).
     */
   final case class FileStats(rows: Long, cols: Map[String, ColStats],
       bytes: Option[Long] = None,
@@ -202,7 +228,7 @@ object TxLog {
       // under the engine's fixed UTC session) of the single partition
       // value every row in the file shares; None = the NULL partition.
       // Nil on unpartitioned tables. Rides in the version record with the
-      // add action and in both checkpoint kinds, exactly like the column
+      // add action and in every checkpoint, exactly like the column
       // stats — losing it on vacuum would disarm partition ops.
       parts: Seq[Option[String]] = Nil)
 
@@ -321,9 +347,6 @@ object TxLog {
   private def versionFile(path: String, v: Long) =
     new java.io.File(logDir(path), f"$v%020d.json")
 
-  private def checkpointVersionFile(path: String, v: Long) =
-    new java.io.File(logDir(path), f"$v%020d.checkpoint.json")
-
   private def checkpointParquetVersionFile(path: String, v: Long) =
     new java.io.File(logDir(path), f"$v%020d.checkpoint.parquet")
 
@@ -334,10 +357,9 @@ object TxLog {
 
   private def listCheckpointVersions(path: String): Seq[Long] =
     Option(logDir(path).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => CheckpointFileRe.findFirstMatchIn(f.getName)
-        .orElse(CheckpointParquetRe.findFirstMatchIn(f.getName))
+      .flatMap(f => CheckpointParquetRe.findFirstMatchIn(f.getName)
         .map(_.group(1).toLong))
-      .toSeq.distinct.sorted
+      .toSeq.sorted
 
   private def checkpointFile(path: String) =
     new java.io.File(logDir(path), CheckpointName)
@@ -398,10 +420,17 @@ object TxLog {
   // the schema is arbitrary JSON, so it ships BASE64-wrapped to keep the
   // record trivially parseable.
   //
-  //   delta record:  {"version":N,"schemaB64":"...","txn":"b64(app):B",
-  //                   "add":[..],"remove":[..]}   (txn optional)
-  //   full record:   {"version":N,"files":[..]}          (legacy v1 format)
-  //   checkpoint:    {"version":N,"schemaB64":"...","txns":[..],"files":[..]}
+  //   version record: {"version":N,"protocol":P,"tsMillis":T,
+  //                    "schemaB64":"...",<optional keys>,
+  //                    "add":[..],"remove":[..]}
+  //   checkpoint:     parquet, one row per file plus a meta row whose
+  //                   `meta` is {"version":N,"protocol":P,"schemaB64":
+  //                   "...","txns":[..],...} (see the parquet section)
+  //
+  // `protocol`, `tsMillis`, `schemaB64`, `add` and `remove` are written
+  // into every record; the optional keys (info, txn, constraints,
+  // statsB64, dvs, partCols, removeParts, colMap, colDrop) are described
+  // with their serializers below.
   //
   // The `txn` action is the idempotent-writer watermark (the Delta
   // protocol's txn action, same shape): appId base64-wrapped so arbitrary
@@ -411,21 +440,18 @@ object TxLog {
   // action history — losing it would silently re-apply an old batch.
   // ---------------------------------------------------------------------
 
-  private final case class VersionRecord(full: Option[Seq[String]],
-      add: Seq[String], remove: Seq[String], schemaB64: Option[String],
+  private final case class VersionRecord(
+      add: Seq[String], remove: Seq[String], schemaB64: String,
       txn: Option[(String, Long)],
       constraints: Option[Map[String, String]],
       stats: Map[String, FileStats],
       info: Option[(String, Map[String, String])],
       dvs: Map[String, Option[String]],
-      // commit wall-clock (epoch millis, raw per-writer stamp); None only
-      // on legacy pre-timestamp records
-      tsMillis: Option[Long],
+      // commit wall-clock (epoch millis, raw per-writer stamp)
+      tsMillis: Long,
       // table partition columns; None = key absent. partCols are
       // immutable after init and written into every record of a
-      // partitioned table, so on such tables every record carries Some;
-      // resolve still inherits (orElse) for robustness against a legacy
-      // record spliced into the tail
+      // partitioned table, so on such tables every record carries Some
       partCols: Option[Seq[String]],
       // REMOVED files' partition tuples (Delta's RemoveFile
       // partitionValues parity): lets the partition-filtered stream
@@ -433,9 +459,7 @@ object TxLog {
       // pre-version snapshot may be unresolvable when v is the oldest
       // retained version after a vacuum (v-1's history is gone), which
       // would otherwise crash a filtered stream on a delete entirely
-      // foreign to its filter. Empty on unpartitioned tables and legacy
-      // records (consumers fall back to resolve(v-1), failing NAMED at
-      // the horizon).
+      // foreign to its filter. Empty on unpartitioned tables.
       removeParts: Map[String, Seq[Option[String]]],
       // column mapping: Some = the FULL post-commit logical→physical map
       // (a mapping-changing commit records complete state, like
@@ -524,8 +548,7 @@ object TxLog {
   // `b64(name),typ,nulls,min,max,smin,smax` (min/max empty = None;
   // smin/smax empty = None, else `p` + b64(value) — the marker
   // disambiguates an absent bound from a present EMPTY-string bound,
-  // which is a legal minimum). Legacy 5-field entries (pre-string-stats)
-  // parse with no string bounds. In a VERSION record the payload covers
+  // which is a legal minimum). In a VERSION record the payload covers
   // only that commit's ADDED files (delta-shaped, O(changed files)
   // bytes); in a CHECKPOINT it covers the full accumulated map (the
   // Delta checkpoint shape) so stats survive vacuum.
@@ -563,9 +586,7 @@ object TxLog {
 
   private def statsToB64(m: Map[String, FileStats]): String = {
     val payload = m.toSeq.sortBy(_._1).map { case (f, fs) =>
-      // 5-field line (file, rows, bytes, colEntries, partitionValues);
-      // bytes empty = None. Legacy 3-field (pre-size) and 4-field
-      // (pre-partition) lines parse with the missing fields defaulted.
+      // 5-field line (file, rows, bytes, colEntries, partitionValues)
       s"$f\t${fs.rows}\t${fs.bytes.map(_.toString).getOrElse("")}\t" +
         s"${colEntriesOf(fs)}\t${pvFieldOf(fs)}"
     }.mkString("\n")
@@ -584,19 +605,16 @@ object TxLog {
 
   /** Parse a `colEntry;colEntry;...` field — the inverse of
     * [[colEntriesOf]], shared by the JSON payload and the parquet
-    * checkpoint reader. Legacy 5-field entries (pre-string-stats) parse
-    * with no string bounds.
+    * checkpoint reader.
     */
   private def parseColEntries(colsField: String): Map[String, ColStats] =
     colsField.split(";").filter(_.nonEmpty).map { e =>
       val f = e.split(",", -1)
-      require(f.length == 5 || f.length == 7,
-        s"TxLog: malformed col-stats entry '$e'")
+      require(f.length == 7, s"TxLog: malformed col-stats entry '$e'")
       (unB64(f(0)), ColStats(f(1), f(2).toLong,
         if (f(3).isEmpty) None else Some(f(3).toLong),
         if (f(4).isEmpty) None else Some(f(4).toLong),
-        if (f.length < 7) None else strStatDec(f(5)),
-        if (f.length < 7) None else strStatDec(f(6))))
+        strStatDec(f(5)), strStatDec(f(6))))
     }.toMap
 
   private def parseStats(text: String): Map[String, FileStats] =
@@ -604,16 +622,10 @@ object TxLog {
       .map { blob =>
         unB64(blob).split("\n").filter(_.nonEmpty).map { line =>
           val parts = line.split("\t", -1)
-          require(parts.length >= 3 && parts.length <= 5,
-            s"TxLog: malformed stats line '$line'")
-          val bytes =
-            if (parts.length < 4 || parts(2).isEmpty) None
-            else Some(parts(2).toLong)
-          val colsField = if (parts.length >= 4) parts(3) else parts(2)
-          val pvals =
-            if (parts.length < 5) Nil else parsePartValues(parts(4))
-          (parts(0), FileStats(parts(1).toLong, parseColEntries(colsField),
-            bytes, pvals))
+          require(parts.length == 5, s"TxLog: malformed stats line '$line'")
+          val bytes = if (parts(2).isEmpty) None else Some(parts(2).toLong)
+          (parts(0), FileStats(parts(1).toLong, parseColEntries(parts(3)),
+            bytes, parsePartValues(parts(4))))
         }.toMap
       }.getOrElse(Map.empty)
 
@@ -621,7 +633,7 @@ object TxLog {
   // `"partCols":"b64(c1),b64(c2)"` — the table's partition columns
   // (Delta's partitionColumns metadata). Immutable after [[init]]; written
   // into EVERY version record of a partitioned table (self-describing
-  // records) and into both checkpoint kinds (vacuum must not forget the
+  // records) and into every checkpoint (vacuum must not forget the
   // table is partitioned — partition ops would silently stop resolving).
   // Absent key = inherit (unpartitioned tables never carry it).
 
@@ -639,7 +651,7 @@ object TxLog {
   // `"colDrop":"b64(phys1),b64(phys2),..."` — same record semantics as
   // constraints: key PRESENT = the full post-commit state (a
   // mapping-changing commit records everything), key ABSENT = inherit.
-  // Both ride in BOTH checkpoint kinds: losing the map on vacuum would
+  // Both ride in every checkpoint: losing the map on vacuum would
   // serve physical column names to readers; losing the tombstones would
   // let a re-added column resurrect dropped data.
 
@@ -692,8 +704,7 @@ object TxLog {
 
   /** The partition tuples of `removed` from the pre-commit stats map —
     * what a remove-bearing commit records alongside its remove actions
-    * (files without recorded tuples are simply absent; consumers fall
-    * back to the pre-version snapshot for those).
+    * (unpartitioned tables' files carry no tuple and are simply absent).
     */
   private def removePartsOf(stats: Map[String, FileStats],
       removed: Seq[String]): Map[String, Seq[Option[String]]] =
@@ -780,30 +791,27 @@ object TxLog {
   /** The cumulative table schema after committing `written` on top of
     * `base`: base fields (updated in place if the written data re-declares
     * them) plus written-only fields appended — the widen-only evolution
-    * the whole-file commit model supports. Stored in the version record so
-    * file-less versions keep a readable schema. A re-declare that NARROWS
-    * (or cross-family changes) a base field is rejected with a named error
-    * — recording it would make a later file-less (delete-all) read serve
-    * the narrowed type while the parquet footers (the authority whenever
-    * files exist) still carry the wide one.
+    * the whole-file commit model supports. Stored in the version record:
+    * it is the schema every read of the version serves. A re-declare that
+    * NARROWS (or cross-family changes) a base field is rejected with a
+    * named error — recording it would make reads serve the narrowed type
+    * over files that still carry the wide one.
     */
-  private def mergeSchemas(base: Option[StructType],
-      written: StructType): StructType = base match {
-    case None => written
-    case Some(b) =>
-      val baseNames = b.fieldNames.toSet
-      b.fields.foreach { f =>
-        written.fields.find(_.name == f.name).foreach { w =>
-          require(isSameOrWidened(f.dataType, w.dataType),
-            s"TxLog: commit re-declares column '${f.name}' as " +
-              s"${w.dataType.simpleString}, narrowing/changing the table's " +
-              s"${f.dataType.simpleString} - only same-or-widened " +
-              "re-declares are recordable as the table schema")
-        }
+  private def mergeSchemas(base: StructType,
+      written: StructType): StructType = {
+    val baseNames = base.fieldNames.toSet
+    base.fields.foreach { f =>
+      written.fields.find(_.name == f.name).foreach { w =>
+        require(isSameOrWidened(f.dataType, w.dataType),
+          s"TxLog: commit re-declares column '${f.name}' as " +
+            s"${w.dataType.simpleString}, narrowing/changing the table's " +
+            s"${f.dataType.simpleString} - only same-or-widened " +
+            "re-declares are recordable as the table schema")
       }
-      StructType(
-        b.fields.map(f => written.fields.find(_.name == f.name).getOrElse(f)) ++
-          written.fields.filterNot(f => baseNames.contains(f.name)))
+    }
+    StructType(
+      base.fields.map(f => written.fields.find(_.name == f.name).getOrElse(f)) ++
+        written.fields.filterNot(f => baseNames.contains(f.name)))
   }
 
   private def parseRecord(path: String, v: Long): VersionRecord = {
@@ -813,77 +821,33 @@ object TxLog {
       "the vacuum retention horizon are gone)")
     val text = new String(java.nio.file.Files.readAllBytes(f.toPath),
       java.nio.charset.StandardCharsets.UTF_8)
-    val full = parseList(text, "files")
-    val add = parseList(text, "add")
-    val remove = parseList(text, "remove")
-    // A record is valid ONLY as a complete legacy full-list record or a
-    // complete delta record with BOTH action keys ([[publish]] always
-    // writes both, `remove` last). A delta record with exactly one key
-    // present is a TRUNCATION: under the degraded CreateWrite primitive a
-    // reader racing the writer can observe the file cut after the add
-    // array — parsing it as remove=Nil would silently resurrect the
-    // commit's removed files. Every truncation must fail loudly instead.
-    // Under HardLink this error is corruption; under CreateWrite it can
-    // also be a transient race on the NEWEST version — retry-able by the
-    // caller either way the caller chooses.
-    if (!(full.isDefined || (add.isDefined && remove.isDefined)))
-      throw new IllegalStateException(
-        s"TxLog: version file ${f.getPath} is not a valid version record " +
-          "(truncated or corrupt; under a degraded CreateWrite publish an " +
-          "unreadable NEWEST version can be a transient race - retry)")
-    VersionRecord(full, add.getOrElse(Nil), remove.getOrElse(Nil),
-      parseSchemaB64(text), parseTxn(text), parseConstraints(text),
-      parseStats(text), parseInfo(text), parseDvs(text), parseTs(text),
-      parsePartCols(text), parseRemoveParts(text),
+    // A record is valid ONLY when it carries every key [[publish]] always
+    // writes, BOTH action arrays included (`remove` last). A record with
+    // the add array but no remove array is a TRUNCATION: under the
+    // degraded CreateWrite primitive a reader racing the writer can
+    // observe the file cut after the add array — parsing it as remove=Nil
+    // would silently resurrect the commit's removed files. Every
+    // truncation must fail loudly instead. Under HardLink this error is
+    // corruption; under CreateWrite it can also be a transient race on
+    // the NEWEST version — retry-able by the caller either way the caller
+    // chooses. The stamp is checked once both arrays are present: an
+    // unstamped record with complete actions is an older log format, not
+    // a torn one.
+    def invalid = new IllegalStateException(
+      s"TxLog: version file ${f.getPath} is not a valid version record " +
+        "(truncated or corrupt; under a degraded CreateWrite publish an " +
+        "unreadable NEWEST version can be a transient race - retry)")
+    val add = parseList(text, "add").getOrElse(throw invalid)
+    val remove = parseList(text, "remove").getOrElse(throw invalid)
+    requireProtocol(path, text)
+    val ts = TsRe.findFirstMatchIn(text).getOrElse(throw invalid).group(1).toLong
+    VersionRecord(add, remove, parseSchemaB64(text).getOrElse(throw invalid),
+      parseTxn(text), parseConstraints(text), parseStats(text), parseInfo(text),
+      parseDvs(text), ts, parsePartCols(text), parseRemoveParts(text),
       parseColMap(text), parseColDrop(text))
   }
 
   private val TsRe = "\"tsMillis\"\\s*:\\s*(-?\\d+)".r
-
-  private def parseTs(text: String): Option[Long] =
-    TsRe.findFirstMatchIn(text).map(_.group(1).toLong)
-
-  /** `(files, schema)` from checkpoint file `v`, or None when missing or
-    * unreadable (the caller replays a longer tail — commit-time
-    * checkpoints never change the answer; the load-bearing vacuum
-    * checkpoint is only consulted when the history below it is gone, and
-    * its absence surfaces as [[parseRecord]]'s named missing-version
-    * error).
-    */
-  private[graft] final case class CheckpointState(files: Seq[String],
-      schema: Option[StructType], txns: Map[String, Long],
-      constraints: Map[String, String], stats: Map[String, FileStats],
-      dvs: Map[String, String], partCols: Seq[String],
-      columnMap: Map[String, String] = Map.empty,
-      physTombstones: Set[String] = Set.empty)
-
-  private def readCheckpoint(path: String, v: Long): Option[CheckpointState] =
-    readCheckpointParquet(path, v).orElse(readCheckpointJson(path, v))
-
-  /** Legacy JSON checkpoint parse (rounds 10-13 wrote this kind; new
-    * checkpoints are parquet). Kept forever: existing tables resolve
-    * through their recorded history.
-    */
-  private[graft] def readCheckpointJson(path: String, v: Long)
-      : Option[CheckpointState] =
-    try {
-      val f = checkpointVersionFile(path, v)
-      if (!f.exists()) None
-      else {
-        val text = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        parseList(text, "files").map(fs =>
-          CheckpointState(fs, parseSchemaB64(text).map(schemaFromB64),
-            parseTxns(text),
-            // a checkpoint is FULL state: absent keys mean empty (legacy
-            // checkpoints predate constraints/stats/dvs/partCols)
-            parseConstraints(text).getOrElse(Map.empty), parseStats(text),
-            parseDvs(text).collect { case (k, Some(dv)) => (k, dv) },
-            parsePartCols(text).getOrElse(Nil),
-            parseColMap(text).getOrElse(Map.empty),
-            parseColDrop(text).getOrElse(Set.empty)))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   // --- parquet checkpoints ---------------------------------------------------
   // The scale-safe checkpoint kind (round-14 verdict item 3; Delta's own
@@ -907,8 +871,10 @@ object TxLog {
   // LocalOutputFile (no Hadoop FS, no .crc litter), staged + ATOMIC_MOVE
   // like every checkpoint; any read failure returns None (advisory
   // checkpoints degrade to a longer replay, the load-bearing vacuum kind
-  // surfaces as the named missing-version error — identical contract to
-  // the JSON kind, proven by the same corruption property fuzz).
+  // surfaces as the named missing-version error — proven by the
+  // corruption property fuzz). A READABLE checkpoint whose meta row lacks
+  // the [[LogProtocol]] stamp is not corruption but an older log format:
+  // it is refused with [[OlderLogFormatException]], never skipped.
 
   private val CheckpointMessageType =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
@@ -923,13 +889,20 @@ object TxLog {
         |  optional binary meta (UTF8);
         |}""".stripMargin)
 
+  /** Atomically (re)write checkpoint `v` — deterministic content for
+    * a given version, so REPLACE is idempotent. Carries FULL state:
+    * files, schema, txn watermarks, constraints, accumulated per-file
+    * stats, DVs, partition columns, column mapping — anything omitted
+    * here would be silently LOST when vacuum drops the action history
+    * below the checkpoint (for constraints that loss would disarm
+    * enforcement, a correctness hazard, not a degradation).
+    */
   private[graft] def writeCheckpointParquet(path: String, v: Long,
-      files: Seq[String], schema: Option[StructType],
+      files: Seq[String], schema: StructType,
       txns: Map[String, Long], constraints: Map[String, String],
       stats: Map[String, FileStats], dvs: Map[String, String],
-      partCols: Seq[String],
-      columnMap: Map[String, String] = Map.empty,
-      tombstones: Set[String] = Set.empty): Unit = {
+      partCols: Seq[String], columnMap: Map[String, String],
+      tombstones: Set[String]): Unit = {
     val dir = logDir(path).toPath
     val tmp = java.nio.file.Files.createTempFile(dir, ".ckptpq", ".tmp")
     java.nio.file.Files.delete(tmp) // writer must create it itself
@@ -943,8 +916,6 @@ object TxLog {
       try {
         val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
           CheckpointMessageType)
-        val schemaPart = schema.map(s =>
-          s""""schemaB64":"${schemaToB64(s)}",""").getOrElse("")
         val txnsPart =
           if (txns.isEmpty) ""
           else s""""txns":[${quoteList(txns.toSeq.sortBy(_._1)
@@ -962,7 +933,7 @@ object TxLog {
           if (tombstones.isEmpty) ""
           else s""""colDrop":"${colDropEntries(tombstones)}","""
         w.write(gf.newGroup().append("kind", "meta").append("meta",
-          s"""{"version":$v,$schemaPart$txnsPart$consPart$partColsPart$colMapPart$colDropPart"k":0}"""))
+          s"""{"version":$v,"protocol":$LogProtocol,"schemaB64":"${schemaToB64(schema)}",$txnsPart$consPart$partColsPart$colMapPart$colDropPart"k":0}"""))
         files.foreach { f =>
           val g = gf.newGroup().append("kind", "file").append("file", f)
           stats.get(f).foreach { fs =>
@@ -983,8 +954,16 @@ object TxLog {
     } finally { java.nio.file.Files.deleteIfExists(tmp); () }
   }
 
+  /** Checkpoint `v` as the snapshot it records, or None when missing or
+    * unreadable (the caller replays a longer tail — commit-time
+    * checkpoints never change the answer; the load-bearing vacuum
+    * checkpoint is only consulted when the history below it is gone, and
+    * its absence surfaces as [[parseRecord]]'s named missing-version
+    * error). A readable checkpoint without the [[LogProtocol]] stamp
+    * raises [[OlderLogFormatException]].
+    */
   private[graft] def readCheckpointParquet(path: String, v: Long)
-      : Option[CheckpointState] =
+      : Option[Snapshot] =
     try {
       val f = checkpointParquetVersionFile(path, v)
       if (!f.exists()) None
@@ -1018,8 +997,11 @@ object TxLog {
             g = reader.read()
           }
           meta.map { m =>
-            CheckpointState(files.result(),
-              parseSchemaB64(m).map(schemaFromB64), parseTxns(m),
+            requireProtocol(path, m)
+            // a stamped meta row without its schema is corrupt: the
+            // NoSuchElementException lands in the unreadable (None) case
+            Snapshot(v, files.result(),
+              schemaFromB64(parseSchemaB64(m).get), parseTxns(m),
               parseConstraints(m).getOrElse(Map.empty), stats, dvs,
               parsePartCols(m).getOrElse(Nil),
               parseColMap(m).getOrElse(Map.empty),
@@ -1027,7 +1009,10 @@ object TxLog {
           }
         } finally reader.close()
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch {
+      case e: OlderLogFormatException => throw e
+      case scala.util.control.NonFatal(_) => None
+    }
 
   /** Checkpoint `v`'s FILE ROWS as a DataFrame — the distributive
     * consumption path for very large tables: (file, rows, bytes, cols,
@@ -1045,76 +1030,6 @@ object TxLog {
       .select("file", "rows", "bytes", "cols", "parts", "dv")
   }
 
-  /** Atomically (re)write checkpoint `v` — deterministic content for
-    * a given version, so REPLACE is idempotent. Carries FULL state:
-    * files, schema, txn watermarks, constraints, accumulated per-file
-    * stats, DVs, partition columns — anything omitted here would be
-    * silently LOST when vacuum drops the action history below the
-    * checkpoint (for constraints that loss would disarm enforcement, a
-    * correctness hazard, not a degradation). New checkpoints are the
-    * PARQUET kind (row-per-file — see the parquet-checkpoints section);
-    * the JSON writer stays as the legacy-kind test seam.
-    */
-  private def writeCheckpointFile(path: String, v: Long, files: Seq[String],
-      schema: Option[StructType], txns: Map[String, Long],
-      constraints: Map[String, String],
-      stats: Map[String, FileStats],
-      dvs: Map[String, String],
-      partCols: Seq[String],
-      columnMap: Map[String, String],
-      tombstones: Set[String]): Unit =
-    writeCheckpointParquet(path, v, files, schema, txns, constraints,
-      stats, dvs, partCols, columnMap, tombstones)
-
-  /** The legacy (rounds 10-13) JSON checkpoint writer — retained so specs
-    * can prove the legacy PARSE path forever (old tables must keep
-    * resolving); production writes go through the parquet kind.
-    */
-  private[graft] def writeCheckpointJsonFile(path: String, v: Long,
-      files: Seq[String],
-      schema: Option[StructType], txns: Map[String, Long],
-      constraints: Map[String, String],
-      stats: Map[String, FileStats],
-      dvs: Map[String, String],
-      partCols: Seq[String],
-      columnMap: Map[String, String] = Map.empty,
-      tombstones: Set[String] = Set.empty): Unit = {
-    val schemaPart = schema.map(s => s""""schemaB64":"${schemaToB64(s)}",""").getOrElse("")
-    val txnsPart =
-      if (txns.isEmpty) ""
-      else s""""txns":[${quoteList(txns.toSeq.sortBy(_._1)
-        .map { case (a, b) => txnEntry(a, b) })}],"""
-    val consPart =
-      if (constraints.isEmpty) ""
-      else s""""constraints":"${constraintsEntries(constraints)}","""
-    val statsPart =
-      if (stats.isEmpty) ""
-      else s""""statsB64":"${statsToB64(stats)}","""
-    val dvsPart =
-      if (dvs.isEmpty) ""
-      else s""""dvs":"${dvEntries(dvs.map { case (k, dv) => k -> Some(dv) })}","""
-    val partColsPart =
-      if (partCols.isEmpty) ""
-      else s""""partCols":"${partColsEntries(partCols)}","""
-    val colMapPart =
-      if (columnMap.isEmpty) ""
-      else s""""colMap":"${colMapEntries(columnMap)}","""
-    val colDropPart =
-      if (tombstones.isEmpty) ""
-      else s""""colDrop":"${colDropEntries(tombstones)}","""
-    val json =
-      s"""{"version":$v,$schemaPart$txnsPart$consPart$statsPart$dvsPart$partColsPart$colMapPart$colDropPart"files":[${quoteList(files)}]}"""
-    val dir = logDir(path).toPath
-    val tmp = java.nio.file.Files.createTempFile(dir, ".ckptfile", ".tmp")
-    try {
-      java.nio.file.Files.write(tmp,
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, checkpointVersionFile(path, v).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } finally { java.nio.file.Files.deleteIfExists(tmp); () }
-  }
-
   /** Resolve version `v`'s file list + schema: newest readable checkpoint
     * ≤ `v` as the base (skipped entirely when `useCheckpoints` is false —
     * the spec's checkpoint+tail ≡ full-replay proof), then replay the
@@ -1122,53 +1037,34 @@ object TxLog {
     */
   private[graft] def resolve(path: String, v: Long,
       useCheckpoints: Boolean = true): Snapshot = {
-    val base: Option[(Long, CheckpointState)] =
-      if (!useCheckpoints) None
-      else listCheckpointVersions(path).filter(_ <= v).sorted.reverse
-        .iterator.flatMap(cv => readCheckpoint(path, cv).map((cv, _)))
-        .nextOption()
-    var files = base.map(_._2.files).getOrElse(Seq.empty[String])
-    var schema = base.flatMap(_._2.schema)
-    var txns = base.map(_._2.txns).getOrElse(Map.empty[String, Long])
-    var constraints =
-      base.map(_._2.constraints).getOrElse(Map.empty[String, String])
-    var stats = base.map(_._2.stats).getOrElse(Map.empty[String, FileStats])
-    var dvs = base.map(_._2.dvs).getOrElse(Map.empty[String, String])
-    var partCols = base.map(_._2.partCols).getOrElse(Seq.empty[String])
-    var columnMap = base.map(_._2.columnMap).getOrElse(Map.empty[String, String])
-    var tombstones = base.map(_._2.physTombstones).getOrElse(Set.empty[String])
-    val start = base.map(_._1 + 1).getOrElse(0L)
-    var w = start
-    while (w <= v) {
-      val rec = parseRecord(path, w)
-      rec.full match {
-        case Some(fs) =>
-          files = fs // legacy full record: absolute reset
-          // a legacy record carries no stats/dvs: keep only entries still
-          // describing a present file (entries for vanished files are noise)
-          val present = fs.toSet
-          stats = stats.filter { case (f, _) => present.contains(f) }
-          dvs = dvs.filter { case (f, _) => present.contains(f) }
-        case None =>
-          val rm = rec.remove.toSet
-          files = files.filterNot(rm.contains) ++ rec.add
-          stats = stats.filterNot { case (f, _) => rm.contains(f) } ++ rec.stats
-          dvs = dvs.filterNot { case (f, _) => rm.contains(f) }
-      }
-      rec.dvs.foreach {
-        case (f, Some(dv)) => dvs = dvs + (f -> dv)
-        case (f, None)     => dvs = dvs - f
-      }
-      schema = rec.schemaB64.map(schemaFromB64).orElse(schema)
-      rec.txn.foreach { case (app, b) => txns = txns + (app -> b) }
-      rec.constraints.foreach(c => constraints = c)
-      rec.partCols.foreach(pc => partCols = pc)
-      rec.colMap.foreach(m => columnMap = m)
-      rec.colDrop.foreach(t => tombstones = t)
-      w += 1
+    val base: Snapshot =
+      (if (!useCheckpoints) None
+      else listCheckpointVersions(path).filter(_ <= v).reverse
+        .iterator.flatMap(readCheckpointParquet(path, _)).nextOption())
+        // the empty state before version 0
+        .getOrElse(Snapshot(-1L, Nil, new StructType()))
+    (base.version + 1 to v).foldLeft(base)((s, w) =>
+      applyRecord(s, w, parseRecord(path, w)))
+  }
+
+  /** The snapshot after committing record `rec` as version `v` on top of
+    * `s` — the one replay step [[resolve]] and the change feed share.
+    * Every key the record omits is inherited from `s`.
+    */
+  private def applyRecord(s: Snapshot, v: Long, rec: VersionRecord): Snapshot = {
+    val rm = rec.remove.toSet
+    var dvs = s.dvs.filterNot { case (f, _) => rm.contains(f) }
+    rec.dvs.foreach {
+      case (f, Some(dv)) => dvs = dvs + (f -> dv)
+      case (f, None)     => dvs = dvs - f
     }
-    Snapshot(v, files, schema, txns, constraints, stats, dvs, partCols,
-      columnMap, tombstones)
+    Snapshot(v, s.files.filterNot(rm.contains) ++ rec.add,
+      schemaFromB64(rec.schemaB64), s.txns ++ rec.txn,
+      rec.constraints.getOrElse(s.constraints),
+      s.stats.filterNot { case (f, _) => rm.contains(f) } ++ rec.stats,
+      dvs, rec.partCols.getOrElse(s.partitionCols),
+      rec.colMap.getOrElse(s.columnMap),
+      rec.colDrop.getOrElse(s.physTombstones))
   }
 
   def snapshot(path: String, asOf: Option[Long] = None): Snapshot = {
@@ -1177,42 +1073,32 @@ object TxLog {
     resolve(path, v)
   }
 
-  /** Read a snapshot as a DataFrame (file names resolve under `path`).
-    * Tables with a RECORDED schema (everything the modern committers
-    * write) are read with that schema EXPLICITLY — the log is the schema
-    * authority, exactly as the registered `graft-txlog` batch format
-    * already serves it: no per-read parquet footer merging or schema
+  /** Read a snapshot as a DataFrame (file names resolve under `path`),
+    * with the version's RECORDED schema EXPLICITLY — the log is the
+    * schema authority, exactly as the registered `graft-txlog` batch
+    * format serves it: no per-read parquet footer merging or schema
     * inference (round-17, guide §6 — at scale `mergeSchema` re-reads
     * every footer on every read; profiled at ~16% of the txlog gates'
     * driver wall in `DataSource.resolveRelation`). The explicit schema
     * gives the same rows by construction: widening appends' older files
     * null-fill the missing columns, and a widened re-declare type-widens
     * (which footer MERGING refused outright — the same round-12 gotcha
-    * the writer-internal probe reads already work around). Legacy logs
-    * with no recorded schema keep the historical mergeSchema read — a
-    * version whose APPENDS carried new columns serves the UNION schema
-    * (the `q_s14_schema_evolution` contract).
+    * the writer-internal probe reads already work around). A version
+    * whose APPENDS carried new columns serves the UNION schema (the
+    * `q_s14_schema_evolution` contract).
     *
     * A version with NO files (delete-all — a legal SQL state) reads as an
-    * EMPTY DataFrame with the schema the log recorded at that commit;
-    * pre-schema legacy logs still error on empty versions.
+    * EMPTY DataFrame with the schema the log recorded at that commit.
     */
   def read(spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(path, asOf)
     if (snap.files.isEmpty)
-      snap.schema match {
-        case Some(sch) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
-        case None =>
-          throw new IllegalArgumentException(
-            s"TxLog: version ${snap.version} of $path has no files and no " +
-              "recorded schema (legacy log) - nothing to serve")
-      }
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
     else alignToRecordedSchema(
       readFilesWithDvs(spark, path, snap.files, snap.dvs,
         columnMap = snap.columnMap, tombstones = snap.physTombstones,
-        explicitSchema = physicalReadSchema(snap)), snap)
+        explicitSchema = Some(physicalReadSchema(snap))), snap)
   }
 
   /** Null-fill columns the RECORDED schema declares but no data file
@@ -1224,15 +1110,11 @@ object TxLog {
     * superset of the footer union by the widen-only commit rules, so
     * this can only APPEND columns, never change existing ones.
     */
-  private def alignToRecordedSchema(df: DataFrame, snap: Snapshot): DataFrame =
-    snap.schema match {
-      case None => df
-      case Some(sch) =>
-        val present = df.columns.toSet
-        sch.fields.filterNot(f => present.contains(f.name))
-          .foldLeft(df)((d, f) =>
-            d.withColumn(f.name, lit(null).cast(f.dataType)))
-    }
+  private def alignToRecordedSchema(df: DataFrame, snap: Snapshot): DataFrame = {
+    val present = df.columns.toSet
+    snap.schema.fields.filterNot(f => present.contains(f.name))
+      .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+  }
 
   /** Metadata-only ADD COLUMN (Delta's `ALTER TABLE ADD COLUMN` — the
     * ONE schema change that needs no data rewrite): record the widened
@@ -1250,9 +1132,7 @@ object TxLog {
       dataType: DataType, expectedVersion: Long,
       alerts: Option[graft.runner.Alerts.Sink] = None): Snapshot = {
     val base = snapshot(path, Some(expectedVersion))
-    val sch = base.schema.getOrElse(throw new IllegalArgumentException(
-      s"TxLog: $path has no recorded schema (legacy log) - ADD COLUMN " +
-        "needs the schema authority the log provides"))
+    val sch = base.schema
     require(!sch.fieldNames.contains(name),
       s"TxLog.addColumn: column '$name' already exists on $path - " +
         "re-declaring a column's type belongs to a widening data commit")
@@ -1272,14 +1152,14 @@ object TxLog {
         (Some(m), m)
       }
     publish(path, expectedVersion + 1, base.files, add = Nil, remove = Nil,
-      Some(widened),
+      widened,
       info = ("ADD_COLUMN",
         Map("name" -> name, "type" -> dataType.simpleString)),
       fullTxns = base.txns, fullConstraints = base.constraints,
       fullStats = base.stats, fullDvs = base.dvs,
       partCols = base.partitionCols, colMap = mapAction,
       fullColMaps = (newMap, base.physTombstones), alerts = alerts)
-    Snapshot(expectedVersion + 1, base.files, Some(widened), base.txns,
+    Snapshot(expectedVersion + 1, base.files, widened, base.txns,
       base.constraints, base.stats, base.dvs, base.partitionCols,
       newMap, base.physTombstones)
   }
@@ -1334,9 +1214,7 @@ object TxLog {
       expectedVersion: Long,
       alerts: Option[graft.runner.Alerts.Sink] = None): Snapshot = {
     val base = snapshot(path, Some(expectedVersion))
-    val sch = base.schema.getOrElse(throw new IllegalArgumentException(
-      s"TxLog: $path has no recorded schema (legacy log) - RENAME COLUMN " +
-        "needs the schema authority the log provides"))
+    val sch = base.schema
     require(sch.fieldNames.contains(oldName),
       s"TxLog.renameColumn: no column '$oldName' on $path (have: " +
         s"${sch.fieldNames.mkString(", ")})")
@@ -1352,14 +1230,14 @@ object TxLog {
     val renamed = StructType(sch.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
     publish(path, expectedVersion + 1, base.files, add = Nil, remove = Nil,
-      Some(renamed),
+      renamed,
       info = ("RENAME_COLUMN", Map("from" -> oldName, "to" -> newName)),
       fullTxns = base.txns, fullConstraints = base.constraints,
       fullStats = base.stats, fullDvs = base.dvs,
       partCols = base.partitionCols,
       colMap = Some(newMap),
       fullColMaps = (newMap, base.physTombstones), alerts = alerts)
-    Snapshot(expectedVersion + 1, base.files, Some(renamed), base.txns,
+    Snapshot(expectedVersion + 1, base.files, renamed, base.txns,
       base.constraints, base.stats, base.dvs, base.partitionCols,
       newMap, base.physTombstones)
   }
@@ -1375,9 +1253,7 @@ object TxLog {
   def dropColumn(path: String, name: String, expectedVersion: Long,
       alerts: Option[graft.runner.Alerts.Sink] = None): Snapshot = {
     val base = snapshot(path, Some(expectedVersion))
-    val sch = base.schema.getOrElse(throw new IllegalArgumentException(
-      s"TxLog: $path has no recorded schema (legacy log) - DROP COLUMN " +
-        "needs the schema authority the log provides"))
+    val sch = base.schema
     require(sch.fieldNames.contains(name),
       s"TxLog.dropColumn: no column '$name' on $path (have: " +
         s"${sch.fieldNames.mkString(", ")})")
@@ -1392,14 +1268,14 @@ object TxLog {
     val tombs = base.physTombstones + m0(name)
     val narrowed = StructType(sch.fields.filterNot(_.name == name))
     publish(path, expectedVersion + 1, base.files, add = Nil, remove = Nil,
-      Some(narrowed),
+      narrowed,
       info = ("DROP_COLUMN", Map("name" -> name)),
       fullTxns = base.txns, fullConstraints = base.constraints,
       fullStats = base.stats, fullDvs = base.dvs,
       partCols = base.partitionCols,
       colMap = Some(newMap), colDrop = Some(tombs),
       fullColMaps = (newMap, tombs), alerts = alerts)
-    Snapshot(expectedVersion + 1, base.files, Some(narrowed), base.txns,
+    Snapshot(expectedVersion + 1, base.files, narrowed, base.txns,
       base.constraints, base.stats, base.dvs, base.partitionCols,
       newMap, tombs)
   }
@@ -1424,28 +1300,30 @@ object TxLog {
     }.reduce(_.unionAll(_))
       .select(col("file").as(DvFileCol), col("row_idx").as(DvRiCol))
 
+  /** A parquet reader serving `explicitSchema` (a [[physicalReadSchema]]),
+    * or the files' merged footer schema when there is none.
+    */
+  private def filesReader(spark: SparkSession,
+      explicitSchema: Option[StructType]) = explicitSchema match {
+    case Some(sch) => spark.read.schema(sch)
+    case None => spark.read.option("mergeSchema", "true")
+  }
+
   /** Load `files` with (file_name, row_index) metadata columns attached —
     * the read-side anchor deletion vectors key on (parquet hidden
     * `_metadata`, per-file physical row position, stable under pushed
-    * filters). `mergeSchema = false` for writer-internal probe/survivor
-    * reads (their historical contract: parquet's own type widening
-    * handles a widened re-declare, which footer MERGING refuses).
+    * filters).
     */
   private def readFilesMeta(spark: SparkSession, path: String,
-      files: Seq[String], mergeSchema: Boolean = true,
+      files: Seq[String],
       columnMap: Map[String, String] = Map.empty,
       tombstones: Set[String] = Set.empty,
-      explicitSchema: Option[StructType] = None): DataFrame = {
-    val reader = explicitSchema match {
-      case Some(sch) => spark.read.schema(sch)
-      case None => spark.read.option("mergeSchema", mergeSchema.toString)
-    }
+      explicitSchema: Option[StructType] = None): DataFrame =
     logicalizeRead(
-      reader.parquet(files.map(f => s"$path/$f"): _*)
+      filesReader(spark, explicitSchema).parquet(files.map(f => s"$path/$f"): _*)
         .withColumn(MetaFileCol, col("_metadata.file_name"))
         .withColumn(MetaRiCol, col("_metadata.row_index")),
       columnMap, tombstones)
-  }
 
   /** Active-DV row-count ceiling for the broadcast-anti-join read path.
     * At or below it, DVs apply as a broadcast LeftAnti on (file_name,
@@ -1530,23 +1408,18 @@ object TxLog {
     */
   private def readFilesWithDvs(spark: SparkSession, path: String,
       files: Seq[String], dvs: Map[String, String],
-      mergeSchema: Boolean = true,
       columnMap: Map[String, String] = Map.empty,
       tombstones: Set[String] = Set.empty,
       explicitSchema: Option[StructType] = None): DataFrame = {
     val present = files.toSet
     val active = dvs.filter { case (f, _) => present.contains(f) }
-    if (active.isEmpty) {
-      val reader = explicitSchema match {
-        case Some(sch) => spark.read.schema(sch)
-        case None => spark.read.option("mergeSchema", mergeSchema.toString)
-      }
+    if (active.isEmpty)
       logicalizeRead(
-        reader.parquet(files.map(f => s"$path/$f"): _*),
+        filesReader(spark, explicitSchema).parquet(files.map(f => s"$path/$f"): _*),
         columnMap, tombstones)
-    } else
+    else
       applyActiveDvs(spark, path,
-        readFilesMeta(spark, path, files, mergeSchema, columnMap, tombstones,
+        readFilesMeta(spark, path, files, columnMap, tombstones,
           explicitSchema), active)
         .drop(MetaFileCol, MetaRiCol)
   }
@@ -1569,31 +1442,24 @@ object TxLog {
     * snapshot, so vacuum physically deletes it and the versions whose
     * deletes it carried become unreadable — read the feed BEFORE
     * vacuuming past it (Delta's CDF retention has the same coupling).
-    * Schema evolution is handled by aligning every version's rows to the
-    * union schema (missing columns NULL), newest-version column order.
+    * Schema evolution: each version's files are read with the RECORDED
+    * schema of the snapshot they belong to (removed files: the version
+    * before; added and DV-touched files: the version itself), and every
+    * version's rows align to the union schema (missing columns NULL). A
+    * narrowing RESTORE therefore still emits the removed wide files'
+    * columns on their delete rows.
     */
   def changes(spark: SparkSession, path: String, fromExclusive: Long,
       to: Long): DataFrame = {
     require(fromExclusive < to,
       s"TxLog.changes: empty range ($fromExclusive, $to]")
-    var (files, dvs) =
-      if (fromExclusive < 0L) (Seq.empty[String], Map.empty[String, String])
-      else {
-        val s = resolve(path, fromExclusive)
-        (s.files, s.dvs)
-      }
-    // every version's rows are served under the FEED-END mapping (the
-    // Delta read-CDF-with-end-schema convention): physical names are
-    // stable across renames, so pre-rename files' rows surface under the
-    // final logical names and dropped columns project out everywhere
     val endSnap = resolve(path, to)
     val parts = Seq.newBuilder[DataFrame]
+    var state = resolve(path, fromExclusive)
     (fromExclusive + 1 to to).foreach { v =>
-      val (ps, nf, nd) = versionChangeParts(spark, path, v, files, dvs,
-        fs => readFilesMeta(spark, path, fs,
-          columnMap = endSnap.columnMap,
-          tombstones = endSnap.physTombstones))
-      parts ++= ps; files = nf; dvs = nd
+      val (ps, after) = versionChangeParts(spark, path, v, state,
+        feedLoader(spark, path, endSnap))
+      parts ++= ps; state = after
     }
     val perVersion = parts.result()
     require(perVersion.nonEmpty,
@@ -1601,13 +1467,26 @@ object TxLog {
     perVersion.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** One version's row-level change emission, given the file/DV state
-    * BEFORE it — the shared core of [[changes]], the keyed CDF consumer,
-    * and the streaming CDF source (whose `loadMeta` returns
-    * streaming-flagged frames; this helper only composes ordinary
-    * transforms on top). `loadMeta` must attach the `__graft_file` /
-    * `__graft_ri` metadata columns ([[readFilesMeta]] shape). Emission
-    * covers all three change carriers, deletes before inserts:
+  /** The batch feed's file loader: `files` of snapshot `at`, read with
+    * `at`'s recorded schema and served under the FEED-END mapping (the
+    * Delta read-CDF-with-end-schema convention): physical names are
+    * stable across renames, so pre-rename files' rows surface under the
+    * final logical names and dropped columns project out everywhere.
+    */
+  private def feedLoader(spark: SparkSession, path: String,
+      endSnap: Snapshot): (Seq[String], Snapshot) => DataFrame =
+    (files, at) => readFilesMeta(spark, path, files,
+      columnMap = endSnap.columnMap, tombstones = endSnap.physTombstones,
+      explicitSchema = Some(physicalReadSchema(at)))
+
+  /** One version's row-level change emission, given the snapshot BEFORE
+    * it — the shared core of [[changes]], the keyed CDF consumer, and the
+    * streaming CDF source (whose `loadMeta` returns streaming-flagged
+    * frames; this helper only composes ordinary transforms on top).
+    * `loadMeta(files, at)` loads files of snapshot `at` and must attach
+    * the `__graft_file` / `__graft_ri` metadata columns ([[readFilesMeta]]
+    * shape). Emission covers all three change carriers, deletes before
+    * inserts:
     *
     *  - REMOVED files: their rows LIVE at v−1 (the pre-version DV state
     *    applies — emitting already-soft-deleted rows again would
@@ -1618,43 +1497,36 @@ object TxLog {
     *    deletes, resurrected rows (a restore clearing a later DV) emit as
     *    inserts.
     *
-    * Returns (tagged parts, files after, DV state after).
+    * Returns (tagged parts, the snapshot at v).
     */
   private[graft] def versionChangeParts(
-      spark: SparkSession, path: String, v: Long,
-      filesBefore: Seq[String], dvBefore: Map[String, String],
-      loadMeta: Seq[String] => DataFrame)
-      : (Seq[DataFrame], Seq[String], Map[String, String]) = {
+      spark: SparkSession, path: String, v: Long, before: Snapshot,
+      loadMeta: (Seq[String], Snapshot) => DataFrame)
+      : (Seq[DataFrame], Snapshot) = {
     val rec = parseRecord(path, v)
-    require(rec.full.isEmpty,
-      s"TxLog.changes: version $v is a legacy full-list record - its " +
-        "add/remove delta is not recoverable from the record alone")
+    val after = applyRecord(before, v, rec)
     val rm = rec.remove.toSet
     val addSet = rec.add.toSet
-    val filesAfter = filesBefore.filterNot(rm.contains) ++ rec.add
-    var dvAfter = dvBefore.filterNot { case (f, _) => rm.contains(f) }
-    rec.dvs.foreach {
-      case (f, Some(dv)) => dvAfter = dvAfter + (f -> dv)
-      case (f, None)     => dvAfter = dvAfter - f
-    }
+    val dvBefore = before.dvs
+    val dvAfter = after.dvs
     def tag(df: DataFrame, kind: String): DataFrame =
       df.drop(MetaFileCol, MetaRiCol)
         .withColumn("_change_type", lit(kind))
         .withColumn("_commit_version", lit(v))
-    def liveRows(files: Seq[String], dvs: Map[String, String]): DataFrame = {
+    def liveRows(files: Seq[String], at: Snapshot): DataFrame = {
       val fileSet = files.toSet
-      val active = dvs.filter { case (f, _) => fileSet.contains(f) }
-      applyActiveDvs(spark, path, loadMeta(files), active)
+      val active = at.dvs.filter { case (f, _) => fileSet.contains(f) }
+      applyActiveDvs(spark, path, loadMeta(files, at), active)
     }
     val removedPart =
       if (rec.remove.isEmpty) Nil
-      else Seq(tag(liveRows(rec.remove, dvBefore), "delete"))
+      else Seq(tag(liveRows(rec.remove, before), "delete"))
     val addedPart =
       if (rec.add.isEmpty) Nil
-      else Seq(tag(liveRows(rec.add, dvAfter), "insert"))
+      else Seq(tag(liveRows(rec.add, after), "insert"))
     // DV delta on files that stay present across the version
     val staying = rec.dvs.keys.toSeq.sorted
-      .filter(f => filesBefore.contains(f) && !rm.contains(f) &&
+      .filter(f => before.files.contains(f) && !rm.contains(f) &&
         !addSet.contains(f))
     val (dvDeletes, dvInserts) =
       if (staying.isEmpty) (Nil, Nil)
@@ -1672,7 +1544,7 @@ object TxLog {
             "left_anti")))
         def dataAt(idx: Option[DataFrame], kind: String): Seq[DataFrame] =
           idx.map { ix =>
-            tag(loadMeta(staying).join(broadcast(ix),
+            tag(loadMeta(staying, after).join(broadcast(ix),
               col(MetaFileCol) === col(DvFileCol) &&
                 col(MetaRiCol) === col(DvRiCol), "left_semi"), kind)
           }.toSeq
@@ -1681,18 +1553,14 @@ object TxLog {
       }
     // deletes first within a version: a rewrite's survivor re-inserts
     // must land after the old rows leave (order matters to appliers)
-    (removedPart ++ dvDeletes ++ addedPart ++ dvInserts,
-      filesAfter, dvAfter)
+    (removedPart ++ dvDeletes ++ addedPart ++ dvInserts, after)
   }
 
   /** Version `v`'s raw file actions `(added, removed)` — the seam the
-    * streaming-source replay consumes (commit-ordered appends). Legacy
-    * full-list records raise: their delta is not recoverable.
+    * streaming-source replay consumes (commit-ordered appends).
     */
   private[graft] def fileActions(path: String, v: Long): (Seq[String], Seq[String]) = {
     val rec = parseRecord(path, v)
-    require(rec.full.isEmpty,
-      s"TxLog: version $v is a legacy full-list record - no action delta")
     (rec.add, rec.remove)
   }
 
@@ -1772,8 +1640,7 @@ object TxLog {
     work.mkdirs()
     var mirror: Option[DataFrame] = None
     var prevCkpt: Option[java.io.File] = None
-    var files = Seq.empty[String]
-    var dvs = Map.empty[String, String]
+    var state = resolve(path, -1L)
     val endSnap = resolve(path, v) // feed-end column mapping (see changes)
     (0L to v).foreach { w =>
       // the shared per-version emission (DV-aware: removed files emit
@@ -1787,11 +1654,9 @@ object TxLog {
       // whenever the version has ANY file action).
       val rec = parseRecord(path, w)
       val mayDelete = rec.remove.nonEmpty || rec.dvs.exists(_._2.isDefined)
-      val (parts, nf, nd) = versionChangeParts(spark, path, w, files, dvs,
-        fs => readFilesMeta(spark, path, fs,
-          columnMap = endSnap.columnMap,
-          tombstones = endSnap.physTombstones))
-      files = nf; dvs = nd
+      val (parts, after) = versionChangeParts(spark, path, w, state,
+        feedLoader(spark, path, endSnap))
+      state = after
       // each part is wholly one kind; split on the tag column
       val dels = parts.map(_.filter(col("_change_type") === "delete"))
         .map(_.select(keys.map(col): _*))
@@ -1820,19 +1685,14 @@ object TxLog {
         prevCkpt = Some(ckpt)
       }
     }
-    mirror.getOrElse {
-      val sch = snapshot(path, Some(v)).schema.getOrElse(
-        throw new IllegalArgumentException(
-          s"TxLog: version $v of $path has no data and no recorded schema"))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
-    }
+    mirror.getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], endSnap.schema))
   }
 
   /** One retained commit's audit row — see [[history]]. `operation` /
-    * `params` come from the version record's commit info (None/empty for
-    * records written before commit info existed); `rowsAdded` sums the
-    * commit's per-added-file stats (None when some added file predates
-    * stats — never guessed).
+    * `params` come from the version record's commit info; `rowsAdded`
+    * sums the commit's per-added-file stats (None when some added file has
+    * no stats — a table with no stats-eligible column — never guessed).
     */
   final case class CommitInfo(version: Long, operation: Option[String],
       params: Map[String, String], addedFiles: Int, removedFiles: Int,
@@ -1856,7 +1716,7 @@ object TxLog {
     require(vs.nonEmpty, s"TxLog: no table at $path")
     vs.reverseIterator.map { v =>
       val rec = parseRecord(path, v)
-      val add = rec.full.getOrElse(rec.add)
+      val add = rec.add
       val rowsAdded =
         if (add.isEmpty) Some(0L)
         else if (add.forall(rec.stats.contains))
@@ -1864,7 +1724,7 @@ object TxLog {
         else None
       CommitInfo(v, rec.info.map(_._1),
         rec.info.map(_._2).getOrElse(Map.empty),
-        add.size, rec.remove.size, rowsAdded, rec.tsMillis)
+        add.size, rec.remove.size, rowsAdded, Some(rec.tsMillis))
     }.toSeq
   }
 
@@ -1900,21 +1760,14 @@ object TxLog {
     * monotonicity (Delta's resolution rule: a stamp at or below its
     * predecessor's clamped value becomes predecessor + 1 ms — version
     * order is the commit truth; wall clocks only annotate it). Ascending
-    * by version. Raises a named error if any retained record lacks a
-    * stamp (legacy pre-timestamp log): timestamp travel over a partially
-    * stamped history would silently mis-resolve — version-based travel
-    * still works there.
+    * by version.
     */
   private[graft] def clampedCommitTimestamps(path: String): Seq[(Long, Long)] = {
     val vs = listVersionNumbers(path).sorted
     require(vs.nonEmpty, s"TxLog: no table at $path")
     var prev = Long.MinValue
     vs.map { v =>
-      val raw = parseRecord(path, v).tsMillis.getOrElse(
-        throw new IllegalStateException(
-          s"TxLog: version $v of $path has no commit timestamp (legacy " +
-            "pre-timestamp record) - TIMESTAMP AS OF needs every retained " +
-            "version stamped; use version-based time travel instead"))
+      val raw = parseRecord(path, v).tsMillis
       val clamped = if (prev == Long.MinValue) raw else math.max(raw, prev + 1)
       prev = clamped
       (v, clamped)
@@ -1967,7 +1820,7 @@ object TxLog {
     */
   private def publish(path: String, v: Long, fullFiles: Seq[String],
       add: Seq[String], remove: Seq[String],
-      schema: Option[StructType],
+      schema: StructType,
       // NO default: every committer must name the operation that produced
       // the version (Delta's commitInfo role) — the raw material of
       // [[history]]; an unattributed commit would be a blind spot in the
@@ -2016,8 +1869,6 @@ object TxLog {
       alerts: Option[graft.runner.Alerts.Sink] = None): Unit = {
     val dir = logDir(path)
     if (!dir.exists()) dir.mkdirs()
-    val schemaPart =
-      schema.map(s => s""""schemaB64":"${schemaToB64(s)}",""").getOrElse("")
     // info/txn/constraints/stats ride BEFORE the action arrays so the
     // truncation guard (both add AND remove present, remove last) keeps
     // covering the whole record
@@ -2043,7 +1894,7 @@ object TxLog {
     val colDropPart = colDrop.map(s =>
       s""""colDrop":"${colDropEntries(s)}",""").getOrElse("")
     val json =
-      s"""{"version":$v,"tsMillis":${clock.value()},$schemaPart$infoPart$txnPart$consPart$statsPart$dvsPart$partColsPart$removePartsPart$colMapPart$colDropPart"add":[${quoteList(add)}],""" +
+      s"""{"version":$v,"protocol":$LogProtocol,"tsMillis":${clock.value()},"schemaB64":"${schemaToB64(schema)}",$infoPart$txnPart$consPart$statsPart$dvsPart$partColsPart$removePartsPart$colMapPart$colDropPart"add":[${quoteList(add)}],""" +
         s""""remove":[${quoteList(remove)}]}"""
     val bytes = json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val target = versionFile(path, v).toPath
@@ -2062,7 +1913,7 @@ object TxLog {
     }
     if (v % CheckpointInterval == 0)
       try {
-        writeCheckpointFile(path, v, fullFiles, schema, fullTxns,
+        writeCheckpointParquet(path, v, fullFiles, schema, fullTxns,
           fullConstraints, fullStats, fullDvs, partCols,
           fullColMaps._1, fullColMaps._2)
         writeCheckpointHint(path, v)
@@ -2434,21 +2285,20 @@ object TxLog {
     * An explicit schema null-fills missing columns and type-widens old
     * ones, which is exactly what the rows MEAN in the table.
     */
-  private def physicalReadSchema(snap: Snapshot): Option[StructType] =
-    snap.schema.map { sch =>
-      def nullable(d: DataType): DataType = d match {
-        case st: StructType => StructType(st.fields.map(f =>
-          f.copy(dataType = nullable(f.dataType), nullable = true)))
-        case org.apache.spark.sql.types.ArrayType(et, _) =>
-          org.apache.spark.sql.types.ArrayType(nullable(et), true)
-        case org.apache.spark.sql.types.MapType(k, v, _) =>
-          org.apache.spark.sql.types.MapType(nullable(k), nullable(v), true)
-        case other => other
-      }
-      StructType(sch.fields.map(f => f.copy(
-        name = snap.columnMap.getOrElse(f.name, f.name),
-        dataType = nullable(f.dataType), nullable = true)))
+  private def physicalReadSchema(snap: Snapshot): StructType = {
+    def nullable(d: DataType): DataType = d match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case org.apache.spark.sql.types.ArrayType(et, _) =>
+        org.apache.spark.sql.types.ArrayType(nullable(et), true)
+      case org.apache.spark.sql.types.MapType(k, v, _) =>
+        org.apache.spark.sql.types.MapType(nullable(k), nullable(v), true)
+      case other => other
     }
+    StructType(snap.schema.fields.map(f => f.copy(
+      name = snap.columnMap.getOrElse(f.name, f.name),
+      dataType = nullable(f.dataType), nullable = true)))
+  }
 
   /** Rename a PHYSICAL frame (a file read) back to logical names and
     * project out dropped columns' tombstoned physicals — the read half of
@@ -2734,7 +2584,7 @@ object TxLog {
         s"(${partitionBy.mkString(", ")})")
     new java.io.File(path).mkdirs()
     val (files, stats) = writeDataFiles(df, path, partitionBy)
-    publish(path, 0L, files, add = files, remove = Nil, Some(df.schema),
+    publish(path, 0L, files, add = files, remove = Nil, df.schema,
       info = ("INIT",
         if (partitionBy.isEmpty) Map.empty[String, String]
         else Map("partitionBy" -> partitionBy.mkString(","))),
@@ -2742,7 +2592,7 @@ object TxLog {
       fullConstraints = Map.empty, fullStats = stats,
       fullDvs = Map.empty, partCols = partitionBy,
       fullColMaps = (Map.empty, Set.empty), alerts = alerts)
-    Snapshot(0L, files, Some(df.schema), stats = stats,
+    Snapshot(0L, files, df.schema, stats = stats,
       partitionCols = partitionBy)
   }
 
@@ -2789,8 +2639,6 @@ object TxLog {
     * at the new head, not a re-run of the write — IF every interleaved
     * commit is logically compatible:
     *
-    *  - delta-shaped (a legacy full-list record resets the file set —
-    *    cannot reason about it);
     *  - no constraint change (our rows were validated against the OLD
     *    set; a concurrent ADD CONSTRAINT must re-validate — re-run);
     *  - the table schema still accepts our written schema
@@ -2822,13 +2670,13 @@ object TxLog {
       val txns = base.txns ++ txn
       try {
         publish(path, base.version + 1, files, add = added, remove = Nil,
-          Some(schema), info = info, txn = txn, fullTxns = txns,
+          schema, info = info, txn = txn, fullTxns = txns,
           addStats = addStats, fullConstraints = base.constraints,
           fullStats = stats, fullDvs = base.dvs,
           partCols = base.partitionCols,
           colMap = if (cmapChanged) Some(cmap) else None,
           fullColMaps = (cmap, base.physTombstones), alerts = alerts)
-        return Snapshot(base.version + 1, files, Some(schema), txns,
+        return Snapshot(base.version + 1, files, schema, txns,
           base.constraints, stats, base.dvs, base.partitionCols,
           cmap, base.physTombstones)
       } catch {
@@ -2838,7 +2686,7 @@ object TxLog {
           val cur = currentVersion(path).getOrElse(throw e)
           val compatible = (base.version + 1 to cur).forall { w =>
             val r = parseRecord(path, w)
-            r.full.isEmpty && r.constraints.isEmpty &&
+            r.constraints.isEmpty &&
               // a concurrent rename/drop changes what our staged files'
               // physical names MEAN — real conflict, re-run
               r.colMap.isEmpty && r.colDrop.isEmpty
@@ -2875,7 +2723,7 @@ object TxLog {
       extendColumnMap(base.columnMap, base.physTombstones, schema)
     val (added, addStats) = writeDataFiles(df, path, base.partitionCols, cmap)
     publish(path, expectedVersion + 1, added, add = added,
-      remove = base.files.sorted, Some(schema),
+      remove = base.files.sorted, schema,
       info = ("OVERWRITE", Map.empty),
       fullTxns = base.txns, addStats = addStats,
       fullConstraints = base.constraints, fullStats = addStats,
@@ -2883,7 +2731,7 @@ object TxLog {
       removeParts = removePartsOf(base.stats, base.files),
       colMap = if (cmapChanged) Some(cmap) else None,
       fullColMaps = (cmap, base.physTombstones), alerts = alerts)
-    Snapshot(expectedVersion + 1, added, Some(schema), base.txns,
+    Snapshot(expectedVersion + 1, added, schema, base.txns,
       base.constraints, addStats, Map.empty, base.partitionCols,
       cmap, base.physTombstones)
   }
@@ -2956,7 +2804,7 @@ object TxLog {
     * passes, standard SQL; spell NOT NULL as `c IS NOT NULL`). EXISTING
     * rows must already satisfy the new constraint (one scan here, the
     * same contract as Delta's ADD CONSTRAINT). The constraint map rides
-    * in the version record and BOTH checkpoint kinds, so enforcement
+    * in the version record and every checkpoint, so enforcement
     * survives vacuum dropping the declaring version; time travel below
     * the declaration reads fine (constraints gate writes, not reads).
     * The declaration is itself a committed version: concurrency-safe
@@ -2970,9 +2818,7 @@ object TxLog {
     require(!base.constraints.contains(name),
       s"TxLog: constraint '$name' already exists - drop it first " +
         "(silent redefinition could relax a guarantee readers rely on)")
-    val schema = base.schema.getOrElse(throw new IllegalArgumentException(
-      s"TxLog: $path has no recorded schema (legacy log) - constraints " +
-        "need the schema authority the log provides"))
+    val schema = base.schema
     // the expression must RESOLVE against the table schema and be BOOLEAN
     // — probed on an empty frame so failures are loud at declaration
     // time, not at some later writer's append
@@ -3043,7 +2889,8 @@ object TxLog {
     require(targetFiles >= 1, "TxLog.compact: targetFiles must be >= 1")
     val base = snapshot(path, Some(expectedVersion))
     // small-file selection from LOG-RECORDED sizes (zero FS stats on
-    // post-size records; legacy files pay one Hadoop-FS stat each)
+    // files with stats; a file of a table with no stats-eligible column
+    // pays one Hadoop-FS stat)
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val small = base.files.filter(f =>
       fileBytes(path, f, base.stats, hadoopConf) <= maxFileBytes)
@@ -3245,16 +3092,14 @@ object TxLog {
         .map(_.getName)
       return (dropping.map(v => versionFile(path, v).getName) ++
         listCheckpointVersions(path).filter(_ < kept.min)
-          .flatMap(v => Seq(checkpointVersionFile(path, v),
-            checkpointParquetVersionFile(path, v))
-            .filter(_.exists()).map(_.getName)) ++
+          .map(v => checkpointParquetVersionFile(path, v).getName) ++
         wouldData ++ wouldDvs ++ wouldTmp).toSeq
     }
     // reconstruction base for the oldest retained version, written
     // atomically BEFORE its history is dropped — this checkpoint is
     // load-bearing (unlike commit-time ones)
     val oldest = snaps.head
-    writeCheckpointFile(path, oldest.version, oldest.files, oldest.schema,
+    writeCheckpointParquet(path, oldest.version, oldest.files, oldest.schema,
       oldest.txns, oldest.constraints, oldest.stats, oldest.dvs,
       oldest.partitionCols, oldest.columnMap, oldest.physTombstones)
     val droppedVersions = dropping.map { v =>
@@ -3263,12 +3108,10 @@ object TxLog {
       f.getName
     }
     val droppedCkpts = listCheckpointVersions(path).filter(_ < kept.min)
-      .flatMap { v =>
-        Seq(checkpointVersionFile(path, v),
-          checkpointParquetVersionFile(path, v)).filter(_.exists()).map { f =>
-          java.nio.file.Files.delete(f.toPath)
-          f.getName
-        }
+      .map { v =>
+        val f = checkpointParquetVersionFile(path, v)
+        java.nio.file.Files.delete(f.toPath)
+        f.getName
       }
     // minAgeMs guards the WRITER race (not just readers): an in-flight
     // commit's freshly-moved data files are referenced by NO version yet —
@@ -3309,7 +3152,8 @@ object TxLog {
 
   /** Count of FS-stat fallbacks taken by [[fileBytes]] — test seam: a
     * fresh table's byte walks must be pure log metadata (count stays 0);
-    * only legacy size-less records pay a stat.
+    * only files without a FileStats entry (a table with no
+    * stats-eligible column commits stat-less records) pay a stat.
     */
   private[graft] val sizeFallbackStats =
     new java.util.concurrent.atomic.AtomicLong(0L)
@@ -3365,10 +3209,7 @@ object TxLog {
     */
   private def touchedFileNames(spark: SparkSession, path: String,
       candidates: Seq[String], probe: DataFrame => DataFrame,
-      dvs: Map[String, String] = Map.empty,
-      columnMap: Map[String, String] = Map.empty,
-      tombstones: Set[String] = Set.empty,
-      explicitSchema: Option[StructType] = None): Set[String] =
+      base: Snapshot): Set[String] =
     if (candidates.isEmpty) Set.empty
     else {
       // DV-aware: rows a deletion vector already killed must not mark a
@@ -3377,11 +3218,11 @@ object TxLog {
       // input_file_name() — the thread-local function refuses plans with
       // two file sources, which the DV anti-join introduces.
       val present = candidates.toSet
-      val active = dvs.filter { case (f, _) => present.contains(f) }
+      val active = base.dvs.filter { case (f, _) => present.contains(f) }
       val live = applyActiveDvs(spark, path,
-        readFilesMeta(spark, path, candidates, mergeSchema = false,
-          columnMap = columnMap, tombstones = tombstones,
-          explicitSchema = explicitSchema), active)
+        readFilesMeta(spark, path, candidates, columnMap = base.columnMap,
+          tombstones = base.physTombstones,
+          explicitSchema = Some(physicalReadSchema(base))), active)
       probe(live).select(col(MetaFileCol)).distinct()
         .collect().map(_.getString(0)).toSet
     }
@@ -3464,11 +3305,8 @@ object TxLog {
       hi: Long, asOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(path, asOf)
     val (kept, _) = statsPrunedFilesCanonical(path, c, lo, hi, asOf)
-    if (kept.isEmpty) snap.schema match {
-      case Some(sch) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
-      case None => read(spark, path, asOf).filter(lit(false))
-    }
+    if (kept.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
     else alignToRecordedSchema(
       readFilesWithDvs(spark, path, kept, snap.dvs,
         columnMap = snap.columnMap, tombstones = snap.physTombstones), snap)
@@ -3517,8 +3355,7 @@ object TxLog {
         case None => base.files
       }
     val touched = touchedFileNames(spark, path, candidates,
-      _.join(k, nk, "left_semi"), base.dvs, base.columnMap,
-      base.physTombstones, physicalReadSchema(base))
+      _.join(k, nk, "left_semi"), base)
     val untouched = base.files.filterNot(touched.contains)
     val schema = mergeSchemas(base.schema, newData.schema)
     enforceConstraints(newData, schema, base.constraints)
@@ -3529,9 +3366,9 @@ object TxLog {
       else {
         val survivors =
           readFilesWithDvs(spark, path, touched.toSeq, base.dvs,
-            mergeSchema = false, columnMap = base.columnMap,
+            columnMap = base.columnMap,
             tombstones = base.physTombstones,
-            explicitSchema = physicalReadSchema(base))
+            explicitSchema = Some(physicalReadSchema(base)))
             .join(k, nk, "left_anti")
         if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
         else writeDataFiles(survivors, path, base.partitionCols, cmap)
@@ -3543,7 +3380,7 @@ object TxLog {
       rewrittenStats ++ addedStats
     val dvsAfter = base.dvs.filterNot { case (f, _) => touched.contains(f) }
     publish(path, expectedVersion + 1, files,
-      add = rewritten ++ added, remove = touched.toSeq.sorted, Some(schema),
+      add = rewritten ++ added, remove = touched.toSeq.sorted, schema,
       info = ("MERGE", Map("keys" -> nk.mkString(","))),
       fullTxns = base.txns, addStats = rewrittenStats ++ addedStats,
       fullConstraints = base.constraints, fullStats = stats,
@@ -3551,7 +3388,7 @@ object TxLog {
       removeParts = removePartsOf(base.stats, touched.toSeq),
       colMap = if (cmapChanged) Some(cmap) else None,
       fullColMaps = (cmap, base.physTombstones), alerts = alerts)
-    Snapshot(expectedVersion + 1, files, Some(schema), base.txns,
+    Snapshot(expectedVersion + 1, files, schema, base.txns,
       base.constraints, stats, dvsAfter, base.partitionCols,
       cmap, base.physTombstones)
   }
@@ -3582,8 +3419,7 @@ object TxLog {
       case None => base.files
     }
     val touched = touchedFileNames(spark, path, candidates, _.filter(cond),
-      base.dvs, base.columnMap, base.physTombstones,
-      physicalReadSchema(base))
+      base)
     val untouched = base.files.filterNot(touched.contains)
     val (rewritten, rewrittenStats) =
       if (touched.isEmpty) (Nil, Map.empty[String, FileStats])
@@ -3595,9 +3431,9 @@ object TxLog {
         // soft-deleted rows must not resurrect into the rewrite.
         val survivors =
           readFilesWithDvs(spark, path, touched.toSeq, base.dvs,
-            mergeSchema = false, columnMap = base.columnMap,
+            columnMap = base.columnMap,
             tombstones = base.physTombstones,
-            explicitSchema = physicalReadSchema(base))
+            explicitSchema = Some(physicalReadSchema(base)))
             .filter(!coalesce(cond, lit(false)))
         if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
         else writeDataFiles(survivors, path, base.partitionCols,
@@ -3828,14 +3664,14 @@ object TxLog {
     val files = base.files ++ added
     val stats = base.stats ++ addStats
     publish(path, expectedVersion + 1, files, add = added, remove = Nil,
-      Some(schema), info = (op, params),
+      schema, info = (op, params),
       fullTxns = base.txns, addStats = addStats,
       fullConstraints = base.constraints, fullStats = stats,
       dvs = entries, fullDvs = dvsAfter,
       partCols = base.partitionCols,
       colMap = if (cmapChanged) Some(cmap) else None,
       fullColMaps = (cmap, base.physTombstones), alerts = alerts)
-    val snap = Snapshot(expectedVersion + 1, files, Some(schema), base.txns,
+    val snap = Snapshot(expectedVersion + 1, files, schema, base.txns,
       base.constraints, stats, dvsAfter, base.partitionCols,
       cmap, base.physTombstones)
     alertDvCardinality(spark, path, snap, alerts)
@@ -3997,10 +3833,7 @@ object TxLog {
     val base = snapshot(path, Some(ev))
     val T = MergeTargetAlias; val S = MergeSourceAlias
     val tgtKeys = keyPairs.map(_._1)
-    val tgtSchema: StructType = base.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"TxLog.mergeDV: $path has no recorded schema (legacy log) - " +
-          "MERGE needs the schema authority the log provides"))
+    val tgtSchema = base.schema
     val tgtNames = tgtSchema.fieldNames.toSet
     (matched.flatMap(_.set).flatMap(_.keys) ++
       notMatched.flatMap(_.insert.keys) ++
@@ -4129,8 +3962,8 @@ object TxLog {
     * Requires every file to carry a recorded partition tuple — true by
     * construction on tables initialized with `partitionBy` (partition
     * columns are stats-eligible, so the stats agg always runs); a file
-    * without one (foreign/legacy) fails LOUDLY, because guessing a
-    * membership either way could silently mis-delete or mis-keep rows.
+    * without one fails LOUDLY, because guessing a membership either way
+    * could silently mis-delete or mis-keep rows.
     */
   private def partitionTuplesDf(spark: SparkSession, path: String,
       snap: Snapshot): DataFrame = {
@@ -4138,9 +3971,7 @@ object TxLog {
     require(snap.partitionCols.nonEmpty,
       s"TxLog: $path is not a partitioned table - partition operations " +
         "need a table initialized with partitionBy")
-    val sch = snap.schema.getOrElse(throw new IllegalArgumentException(
-      s"TxLog: $path has no recorded schema (legacy log) - partition " +
-        "operations need the schema authority the log provides"))
+    val sch = snap.schema
     val uncovered = snap.files.filterNot(f =>
       snap.stats.get(f).exists(_.parts.size == snap.partitionCols.size))
     require(uncovered.isEmpty,
@@ -4245,10 +4076,11 @@ object TxLog {
     * metadata: removed files' tuples come from the version record's OWN
     * `removeParts` (Delta RemoveFile parity — recorded at commit time,
     * so classification needs only the record itself, exactly like the
-    * byte budget); legacy pre-removeParts records fall back to the
-    * pre-version snapshot, failing with a NAMED vacuum-horizon error
-    * when v-1's history is gone (v the oldest retained version) instead
-    * of a raw missing-version failure.
+    * byte budget). A remove without a recorded tuple fails NAMED, never
+    * guessed. A DV-touched file missing from the post-version stats takes
+    * its tuple from the pre-version snapshot, failing with a NAMED
+    * vacuum-horizon error when v-1's history is gone (v the oldest
+    * retained version) instead of a raw missing-version failure.
     */
   private[graft] def versionPartitionView(spark: SparkSession, path: String,
       v: Long, cond: Column): (Seq[String], Boolean) = {
@@ -4261,26 +4093,23 @@ object TxLog {
     // a commit can both remove a file and clear its DV entry (restore
     // does exactly this) — the file is classified ONCE, as a remove
     val dvTouched = rec.dvs.keys.toSeq.filterNot(rm.contains)
-    // legacy fallback only: the pre-version snapshot, needed when a
-    // pre-removeParts record removed files, or a DV-touched file is
-    // absent from the post-version stats (removed+replaced same commit)
+    // the pre-version snapshot, needed only when a DV-touched file is
+    // absent from the post-version stats
     lazy val prevStats: Map[String, FileStats] =
       try resolve(path, v - 1).stats
       catch {
         case e: IllegalArgumentException => throw new IllegalStateException(
-          s"TxLog: version $v of $path is a legacy record without " +
-            "recorded remove-file partition values, and the pre-version " +
-            s"snapshot ${v - 1} is below the vacuum retention horizon - " +
-            "a partition-filtered stream cannot classify its removes; " +
-            "restart the stream from a retained startingVersion", e)
+          s"TxLog: version $v of $path changes the deletion vector of a " +
+            "file with no post-version stats, and the pre-version snapshot " +
+            s"${v - 1} is below the vacuum retention horizon - a " +
+            "partition-filtered stream cannot classify it; restart the " +
+            "stream from a retained startingVersion", e)
       }
-    val partsOfRemoved: String => Option[Seq[Option[String]]] = f =>
-      rec.removeParts.get(f).orElse(prevStats.get(f).map(_.parts))
     val entries0: Seq[(String, Seq[Option[String]])] =
       (rec.add.map(f => f -> rec.stats.get(f).map(_.parts)) ++
         dvTouched.map(f => f -> snapV.stats.get(f).map(_.parts)
           .orElse(prevStats.get(f).map(_.parts))) ++
-        rec.remove.map(f => f -> partsOfRemoved(f))).map {
+        rec.remove.map(f => f -> rec.removeParts.get(f))).map {
         case (f, Some(parts)) if parts.size == snapV.partitionCols.size =>
           f -> parts
         case (f, _) => throw new IllegalStateException(
@@ -4288,9 +4117,7 @@ object TxLog {
             "partition values - a partition-filtered stream cannot " +
             "decide its membership")
       }
-    val sch = snapV.schema.getOrElse(throw new IllegalStateException(
-      s"TxLog: $path has no recorded schema (legacy log)"))
-    val matching = matchingOfTuples(spark, snapV.partitionCols, sch,
+    val matching = matchingOfTuples(spark, snapV.partitionCols, snapV.schema,
       entries0.distinct, cond)
     (rec.add.filter(matching.contains),
       (rec.remove ++ dvTouched).exists(matching.contains))
@@ -4321,7 +4148,7 @@ object TxLog {
     val (matching, _) = splitByPartition(spark, path, snap, cond)
     if (matching.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        snap.schema.get)
+        snap.schema)
     else alignToRecordedSchema(
       readFilesWithDvs(spark, path, matching, snap.dvs,
         columnMap = snap.columnMap, tombstones = snap.physTombstones), snap)
@@ -4417,7 +4244,7 @@ object TxLog {
         val rest = curBase.files.filterNot(matchSet.contains)
         try {
           publish(path, curBase.version + 1, rest ++ added, add = added,
-            remove = matching.sorted, Some(schema),
+            remove = matching.sorted, schema,
             info = ("REPLACE_WHERE", Map("predicate" -> cond.toString)),
             fullTxns = curBase.txns, addStats = addStats,
             fullConstraints = curBase.constraints, fullStats = stats,
@@ -4426,7 +4253,7 @@ object TxLog {
             colMap = if (cmapChanged) Some(cmap) else None,
             fullColMaps = (cmap, curBase.physTombstones),
             alerts = alerts)
-          out = Snapshot(curBase.version + 1, rest ++ added, Some(schema),
+          out = Snapshot(curBase.version + 1, rest ++ added, schema,
             curBase.txns, curBase.constraints, stats, dvsAfter,
             curBase.partitionCols, cmap, curBase.physTombstones)
         } catch {
@@ -4436,7 +4263,7 @@ object TxLog {
             val cur = currentVersion(path).getOrElse(throw e)
             val compatible = (curBase.version + 1 to cur).forall { w =>
               val r = parseRecord(path, w)
-              r.full.isEmpty && r.constraints.isEmpty &&
+              r.constraints.isEmpty &&
                 r.colMap.isEmpty && r.colDrop.isEmpty &&
                 r.remove.forall(f => !matchSet.contains(f)) &&
                 r.dvs.keys.forall(f => !matchSet.contains(f)) && {

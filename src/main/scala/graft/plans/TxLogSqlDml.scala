@@ -578,8 +578,7 @@ case class GraftTxLogDropColumnsCommand(nameParts: Seq[String],
     // already committed must leave the catalog consistent with the LOG,
     // or every subsequent SELECT hits the schema-drift refusal
     try cols.foreach { c =>
-      val present = TxLog.snapshot(path).schema
-        .exists(_.fieldNames.contains(c))
+      val present = TxLog.snapshot(path).schema.fieldNames.contains(c)
       if (present)
         version = TxLog.commitWithRetry(path)(v =>
           TxLog.dropColumn(path, c, v)).version
@@ -708,12 +707,10 @@ private[plans] object TxLogDmlExec {
     */
   def repinCatalogSchema(spark: SparkSession, ident: TableIdentifier,
       path: String): Unit = {
-    TxLog.snapshot(path).schema.foreach { sch =>
-      val catalog = spark.sessionState.catalog
-      val meta = catalog.getTableMetadata(ident)
-      catalog.alterTable(meta.copy(schema =
-        graft.streaming.TxLogRelation.asNullableSchema(sch)))
-    }
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableMetadata(ident)
+    catalog.alterTable(meta.copy(schema =
+      graft.streaming.TxLogRelation.asNullableSchema(TxLog.snapshot(path).schema)))
     refresh(spark, path)
   }
 }

@@ -304,10 +304,7 @@ case class GraftTable(tableName: String, dir: String,
   override def name(): String = tableName
 
   override val schema: StructType =
-    TxLogRelation.asNullableSchema(snap.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"graft catalog: version $servedVersion of $dir has no recorded " +
-          "schema (legacy log)")))
+    TxLogRelation.asNullableSchema(snap.schema)
 
   override def partitioning(): Array[Transform] =
     snap.partitionCols.map(c =>

@@ -114,16 +114,9 @@ object TxLogRelation {
     val path = TxLogSource.tablePath(parameters)
     val version = resolveVersion(path, parameters)
     val snap = TxLog.snapshot(path, Some(version))
-    val logSchema: StructType = snap.schema.getOrElse {
-      require(snap.files.nonEmpty,
-        s"graft-txlog: version $version of $path has no files and no " +
-          "recorded schema (legacy log) - nothing to serve")
-      spark.read.option("mergeSchema", "true")
-        .parquet(snap.files.map(f => s"$path/$f"): _*).schema
-    }
     // file sources serve every column nullable; catalog registration
     // stored exactly this shape, so the equality below is well-defined
-    val served = allNullable(logSchema)
+    val served = allNullable(snap.schema)
     catalogSchema.foreach { cat =>
       require(cat == served,
         s"graft-txlog: the catalog schema for $path no longer matches " +
@@ -213,12 +206,8 @@ object TxLogCdfRelation {
     require(from >= 0 && to >= from && to <= cur,
       s"graft-txlog-cdf: invalid version range [$from, $to] " +
         s"(table is at version $cur)")
-    val dataSchema = TxLog.snapshot(path, Some(to)).schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-txlog-cdf: version $to of $path has no recorded schema " +
-          "(legacy log)"))
     TxLogCdfRelation(path, from - 1, to,
-      TxLogCdfSource.cdfSchema(dataSchema))(spark)
+      TxLogCdfSource.cdfSchema(TxLog.snapshot(path, Some(to)).schema))(spark)
   }
 }
 

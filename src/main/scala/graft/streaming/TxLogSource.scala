@@ -217,7 +217,7 @@ class TxLogSourceProvider extends StreamSourceProvider
       parameters: Map[String, String]): (String, StructType) = {
     val path = TxLogSource.tablePath(parameters)
     (shortName(),
-      schema.getOrElse(TxLogSource.tableSchema(sqlContext.sparkSession, path)))
+      schema.getOrElse(TxLogSource.tableSchema(path)))
   }
 
   override def createSource(
@@ -227,7 +227,7 @@ class TxLogSourceProvider extends StreamSourceProvider
       providerName: String,
       parameters: Map[String, String]): Source = {
     val path = TxLogSource.tablePath(parameters)
-    val sch = schema.getOrElse(TxLogSource.tableSchema(sqlContext.sparkSession, path))
+    val sch = schema.getOrElse(TxLogSource.tableSchema(path))
     val maxVersions = TxLogSource.maxVersionsOf(parameters, "graft-txlog")
     val partitionFilter = parameters.get(TxLogSource.PartitionFilterKey)
     partitionFilter.foreach { _ =>
@@ -456,12 +456,11 @@ object TxLogSource {
   }
 
   /** The table's schema at its current version: the log's recorded schema
-    * (authoritative even for file-less versions), falling back to the
-    * newest snapshot's parquet footers for pre-schema legacy logs.
-    * AS-NULLABLE (the file-source convention, same as catalog
-    * registration): a stream MUST declare nullable columns because
-    * batches legitimately null-fill — files predating an added/re-added
-    * column, tombstone projections under column mapping. Declaring the
+    * (authoritative even for file-less versions), AS-NULLABLE (the
+    * file-source convention, same as catalog registration): a stream MUST
+    * declare nullable columns because batches legitimately null-fill —
+    * files predating an added/re-added column, tombstone projections
+    * under column mapping. Declaring the
     * recorded nullability instead is a REAL silent-corruption hazard
     * (caught by the round-15 column-mapping stream spec): an append can
     * narrow a recorded column to non-nullable (mergeSchemas keeps the
@@ -469,14 +468,8 @@ object TxLogSource {
     * attribute turns every null-filled value into 0 — no error, wrong
     * data.
     */
-  private[streaming] def tableSchema(spark: SparkSession, path: String): StructType = {
-    val snap = TxLog.snapshot(path)
-    TxLogRelation.asNullableSchema(snap.schema.getOrElse {
-      require(snap.files.nonEmpty,
-        s"graft-txlog source: $path has no recorded schema and no files")
-      spark.read.parquet(snap.files.map(f => s"$path/$f"): _*).schema
-    })
-  }
+  private[streaming] def tableSchema(path: String): StructType =
+    TxLogRelation.asNullableSchema(TxLog.snapshot(path).schema)
 }
 
 /** The version-offset machinery shared by both TxLog streaming sources
@@ -656,58 +649,55 @@ abstract class TxLogVersionedSource(
     */
   protected final def checkSchemaPinned(toInclusive: Long): Unit = {
     val snap = TxLog.snapshot(tablePath, Some(toInclusive))
-    val logSchema = snap.schema
-    logSchema.foreach { s =>
-      // the comparison is keyed on PHYSICAL names (column mapping): a
-      // renamed column keeps its physical identity, so it matches its
-      // pinned self and streams on under the pinned logical name; a
-      // fresh physical name is genuinely new data the pinned read would
-      // silently drop — the widen contract below refuses it by (logical)
-      // name. Identity mapping degenerates to the original logical-name
-      // comparison.
-      val pinned = pinnedSchema.fields.map(f =>
-        pinnedColumnMap.getOrElse(f.name, f.name) -> f.dataType).toMap
-      def physOf(n: String): String = snap.columnMap.getOrElse(n, n)
-      // a column whose physical is TOMBSTONED at pin time is DROPPED
-      // data, not new data: the pinned read correctly omits it (reading
-      // a pre-drop version of the table through the current schema — the
-      // same contract as the batch read's tombstone projection)
-      val added = s.fields.filterNot(f => pinned.contains(physOf(f.name))
-          || pinnedTombstones.contains(physOf(f.name)))
-        .map(_.name)
-      // a same-name TYPE widen (int→long re-declare, legal in the log)
-      // is the same hazard: the pinned narrower read of the new files
-      // would fail or truncate. The REVERSE direction is fine — a
-      // restarted query pins the WIDE schema while old versions record
-      // the narrow one, and reading narrow files through a wider pinned
-      // type is exactly the null-fill/widen contract.
-      def readsLosslessly(log: org.apache.spark.sql.types.DataType,
-          pin: org.apache.spark.sql.types.DataType): Boolean = {
-        import org.apache.spark.sql.types._
-        def rank(d: DataType): Int = d match {
-          case ByteType => 0; case ShortType => 1
-          case IntegerType => 2; case LongType => 3; case _ => -1
-        }
-        log == pin || ((log, pin) match {
-          case (FloatType, DoubleType) => true
-          case (d1: DecimalType, d2: DecimalType) =>
-            d1.scale == d2.scale && d1.precision <= d2.precision
-          case _ => rank(log) >= 0 && rank(pin) >= 0 && rank(log) <= rank(pin)
-        })
+    // the comparison is keyed on PHYSICAL names (column mapping): a
+    // renamed column keeps its physical identity, so it matches its
+    // pinned self and streams on under the pinned logical name; a
+    // fresh physical name is genuinely new data the pinned read would
+    // silently drop — the widen contract below refuses it by (logical)
+    // name. Identity mapping degenerates to the original logical-name
+    // comparison.
+    val pinned = pinnedSchema.fields.map(f =>
+      pinnedColumnMap.getOrElse(f.name, f.name) -> f.dataType).toMap
+    def physOf(n: String): String = snap.columnMap.getOrElse(n, n)
+    // a column whose physical is TOMBSTONED at pin time is DROPPED
+    // data, not new data: the pinned read correctly omits it (reading
+    // a pre-drop version of the table through the current schema — the
+    // same contract as the batch read's tombstone projection)
+    val added = snap.schema.fields.filterNot(f => pinned.contains(physOf(f.name))
+        || pinnedTombstones.contains(physOf(f.name)))
+      .map(_.name)
+    // a same-name TYPE widen (int→long re-declare, legal in the log)
+    // is the same hazard: the pinned narrower read of the new files
+    // would fail or truncate. The REVERSE direction is fine — a
+    // restarted query pins the WIDE schema while old versions record
+    // the narrow one, and reading narrow files through a wider pinned
+    // type is exactly the null-fill/widen contract.
+    def readsLosslessly(log: org.apache.spark.sql.types.DataType,
+        pin: org.apache.spark.sql.types.DataType): Boolean = {
+      import org.apache.spark.sql.types._
+      def rank(d: DataType): Int = d match {
+        case ByteType => 0; case ShortType => 1
+        case IntegerType => 2; case LongType => 3; case _ => -1
       }
-      val widened = s.fields.filter(f =>
-        pinned.get(physOf(f.name)).exists(p =>
-          !readsLosslessly(f.dataType, p)))
-        .map(_.name)
-      val offending = added ++ widened
-      if (offending.nonEmpty) throw new IllegalStateException(
-        s"graft-txlog source: the table schema at $tablePath widened " +
-          s"mid-stream (column(s): ${offending.mkString(", ")}; version " +
-          s"$toInclusive) - this stream pinned the query-start schema " +
-          "and will not silently drop or misread the new data. Restart " +
-          "the query: it resumes from its checkpoint with the widened " +
-          "schema (pre-evolution files null-fill).")
+      log == pin || ((log, pin) match {
+        case (FloatType, DoubleType) => true
+        case (d1: DecimalType, d2: DecimalType) =>
+          d1.scale == d2.scale && d1.precision <= d2.precision
+        case _ => rank(log) >= 0 && rank(pin) >= 0 && rank(log) <= rank(pin)
+      })
     }
+    val widened = snap.schema.fields.filter(f =>
+      pinned.get(physOf(f.name)).exists(p =>
+        !readsLosslessly(f.dataType, p)))
+      .map(_.name)
+    val offending = added ++ widened
+    if (offending.nonEmpty) throw new IllegalStateException(
+      s"graft-txlog source: the table schema at $tablePath widened " +
+        s"mid-stream (column(s): ${offending.mkString(", ")}; version " +
+        s"$toInclusive) - this stream pinned the query-start schema " +
+        "and will not silently drop or misread the new data. Restart " +
+        "the query: it resumes from its checkpoint with the widened " +
+        "schema (pre-evolution files null-fill).")
   }
 
   final override def getOffset: Option[OffsetV1] =
@@ -816,10 +806,11 @@ class TxLogSource(
       }
     }
 
-  // log-recorded add-action sizes (zero filesystem stats on post-size
-  // records; a legacy size-less file pays one Hadoop-FS stat — never
-  // java.io.File.length(), which is silently 0 off local FS and would
-  // make the byte budget inert with no error). Under a partition filter
+  // log-recorded add-action sizes (zero filesystem stats for files with
+  // stats; a file of a table with no stats-eligible column has none and
+  // pays one Hadoop-FS stat — never java.io.File.length(), which is
+  // silently 0 off local FS and would make the byte budget inert with no
+  // error). Under a partition filter
   // the budget counts only the files this stream will actually read.
   protected def versionBytes(v: Long): Long = partitionFilter match {
     case None => TxLog.versionAddBytes(tablePath, v,
@@ -929,7 +920,7 @@ class TxLogCdfSourceProvider extends StreamSourceProvider
       parameters: Map[String, String]): (String, StructType) = {
     val path = TxLogSource.tablePath(parameters)
     (shortName(), schema.getOrElse(TxLogCdfSource.cdfSchema(
-      TxLogSource.tableSchema(sqlContext.sparkSession, path))))
+      TxLogSource.tableSchema(path))))
   }
 
   override def createSource(
@@ -944,7 +935,7 @@ class TxLogCdfSourceProvider extends StreamSourceProvider
         "supported on the change feed (a change-row consumer filters " +
         "rows, not files: add .filter(...) on the stream; file-level " +
         "partition admission is the APPEND source's contract)")
-    val dataSchema = TxLogSource.tableSchema(sqlContext.sparkSession, path)
+    val dataSchema = TxLogSource.tableSchema(path)
     val maxVersions = TxLogSource.maxVersionsOf(parameters, "graft-txlog-cdf")
     new TxLogCdfSource(sqlContext.sparkSession, path, dataSchema,
       metadataPath, maxVersions, TxLogSource.startingVersionOf(parameters, path),
@@ -992,27 +983,24 @@ class TxLogCdfSource(
     // version's files read in place as streaming-flagged frames with the
     // (file_name, row_index) metadata columns attached; the DV
     // anti/semi-joins the core composes on top are stream-static joins
-    // with metadata-scale static sides. dataSchema pinned at query start:
-    // narrower pre-evolution files null-fill, every part has IDENTICAL
-    // shape, so the union below needs no name-based alignment.
-    def loadMeta(files: Seq[String]): DataFrame =
+    // with metadata-scale static sides. dataSchema pinned at query start
+    // (not each version's recorded schema — `at` goes unused — because a
+    // stream serves one row shape): narrower pre-evolution files
+    // null-fill, every part has IDENTICAL shape, so the union below needs
+    // no name-based alignment.
+    def loadMeta(files: Seq[String], at: TxLog.Snapshot): DataFrame =
       logicalizeBatch(
         StreamingSourceBridge.streamingFileBatch(spark, physicalPinnedSchema,
             files.map(f => s"$tablePath/$f"))
           .withColumn(TxLog.MetaFileCol, col("_metadata.file_name"))
           .withColumn(TxLog.MetaRiCol, col("_metadata.row_index")),
         extra = Seq(TxLog.MetaFileCol, TxLog.MetaRiCol))
-    var (files, dvs) =
-      if (from < 0L) (Seq.empty[String], Map.empty[String, String])
-      else {
-        val s = TxLog.snapshot(tablePath, Some(from))
-        (s.files, s.dvs)
-      }
+    var state = TxLog.resolve(tablePath, from)
     val parts = Seq.newBuilder[DataFrame]
     (from + 1 to to).foreach { v =>
-      val (ps, nf, nd) = TxLog.versionChangeParts(spark, tablePath, v,
-        files, dvs, loadMeta)
-      parts ++= ps; files = nf; dvs = nd
+      val (ps, after) = TxLog.versionChangeParts(spark, tablePath, v,
+        state, loadMeta)
+      parts ++= ps; state = after
     }
     val all = parts.result()
     if (all.isEmpty) StreamingSourceBridge.emptyStreamingBatch(spark, schema)

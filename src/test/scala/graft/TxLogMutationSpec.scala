@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * without file rewrites), commit timestamps + TIMESTAMP AS OF (with the
   * Delta monotonicity clamp and both refusal directions), log-recorded
   * add-file sizes (byte walks are pure log metadata; FS-stat fallback
-  * only for legacy records), and vacuum's dryRun + streaming-lag guard.
+  * only for files without stats), and vacuum's dryRun + streaming-lag
+  * guard.
   */
 class TxLogMutationSpec extends SparkSpecBase {
   import spark.implicits._
@@ -145,23 +146,25 @@ class TxLogMutationSpec extends SparkSpecBase {
     TxLog.versionAtTimestamp(path, 250000L) shouldBe 2L
   }
 
-  test("timestamp travel refuses on a partially stamped (legacy) history") {
+  test("a record stripped of its commit timestamp is not a valid version record") {
     val path = freshPath()
     TxLog.init(rows(0 until 10), path)
-    // manufacture a legacy record: strip the tsMillis field from v0
-    val vf = new java.io.File(path, "_graft_txlog/00000000000000000000.json")
+    TxLog.append(rows(10 until 20), path, 0L)
+    // every record carries tsMillis: a stamped record without it is
+    // corrupt, on timestamp AND version travel alike
+    val vf = new java.io.File(path, f"_graft_txlog/${1L}%020d.json")
     val text = new String(java.nio.file.Files.readAllBytes(vf.toPath), "UTF-8")
     java.nio.file.Files.write(vf.toPath,
       text.replaceFirst("\"tsMillis\":-?\\d+,", "").getBytes("UTF-8"))
-    TxLog.append(rows(10 until 20), path, 0L)
     intercept[IllegalStateException] {
       TxLog.versionAtTimestamp(path, System.currentTimeMillis())
-    }.getMessage should include("no commit timestamp")
-    // version-based travel still serves it
-    TxLog.read(spark, path, asOf = Some(0L)).count() shouldBe 10L
+    }.getMessage should include("not a valid version record")
+    intercept[IllegalStateException] {
+      TxLog.read(spark, path, asOf = Some(1L))
+    }.getMessage should include("not a valid version record")
   }
 
-  test("byte walks are pure log metadata on fresh tables; legacy stat-less records fall back to ONE FS stat per file") {
+  test("byte walks are pure log metadata; stat-less tables pay one FS stat per file") {
     val path = freshPath()
     TxLog.init(rows(0 until 100).repartitionByRange(3, col("id")), path)
     TxLog.append(rows(100 until 150), path, 0L)

@@ -521,14 +521,14 @@ class TxLogPartitionSpec extends SparkSpecBase {
     touch0 shouldBe true
   }
 
-  test("versionPartitionView: legacy record without removeParts fails " +
-      "NAMED at the vacuum horizon (not a raw missing-version error)") {
+  test("versionPartitionView: a remove without removeParts fails NAMED") {
     val path = freshPath()
     TxLog.init(rows(0 until 100), path, partitionBy = Seq("grp"))   // v0
     TxLog.append(rows(100 until 150), path, 0L)                     // v1
     TxLog.deletePartitions(spark, path, col("grp") === 0L, 1L)      // v2
-    TxLog.append(rows(150 until 180), path, 2L)                     // v3
-    // simulate a pre-removeParts (round-13) record: strip the key
+    // every partitioned remove records its tuple; strip the key and the
+    // remove is unclassifiable from the record — refused, never guessed
+    // from the pre-version snapshot
     val vf = new java.io.File(path, f"_graft_txlog/${2L}%020d.json")
     val txt = new String(java.nio.file.Files.readAllBytes(vf.toPath),
       java.nio.charset.StandardCharsets.UTF_8)
@@ -536,16 +536,10 @@ class TxLogPartitionSpec extends SparkSpecBase {
     java.nio.file.Files.write(vf.toPath,
       txt.replaceAll("\"removeParts\"\\s*:\\s*\"[^\"]*\",", "")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // above the horizon the legacy fallback still resolves v-1
-    val (_, touch) = TxLog.versionPartitionView(spark, path, 2L,
-      col("grp") === 0L)
-    touch shouldBe true
-    TxLog.vacuum(path, retainVersions = 2, minAgeMs = 0L)
     val e = intercept[IllegalStateException] {
       TxLog.versionPartitionView(spark, path, 2L, col("grp") === 1L)
     }
-    e.getMessage should include("vacuum retention horizon")
-    e.getMessage should include("startingVersion")
+    e.getMessage should include("carries no recorded partition values")
   }
 
   test("versionPartitionView: a RESTORE version (removes + DV clears in " +
