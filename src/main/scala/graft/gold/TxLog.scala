@@ -1347,17 +1347,21 @@ object TxLog {
 
   /** Driver-side cache of sidecar footer row counts (immutable files —
     * cacheable forever). One footer read per sidecar lifetime, no job.
+    * Size-bounded (ADVICE r15): a session soft-deleting forever would
+    * otherwise keep one entry per sidecar ever seen, including ones
+    * purge/compact/vacuum already shed. 64k entries ≈ a few MB; eviction
+    * drops entries not used recently, so hot sidecars stay cached.
     */
   private val sidecarRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    com.google.common.cache.CacheBuilder.newBuilder()
+      .maximumSize(65536).build[String, java.lang.Long]()
 
   private def sidecarRowCount(path: String, dvFile: String): Long = {
-    // size-capped (ADVICE r15): a session soft-deleting forever would
-    // otherwise accumulate one entry per sidecar EVER seen, including
-    // ones purge/compact/vacuum already shed. 64k entries ≈ a few MB;
-    // a full reset only costs re-reading live footers once.
-    if (sidecarRowsCache.size() > 65536) sidecarRowsCache.clear()
-    sidecarRowsCache.computeIfAbsent(s"$path/$dvFile", { key =>
+    val key = s"$path/$dvFile"
+    val cached = sidecarRowsCache.getIfPresent(key)
+    if (cached != null) cached.longValue()
+    else {
+      // two threads may both read one footer; the file is immutable
       val md = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
         new org.apache.hadoop.conf.Configuration(),
         new org.apache.hadoop.fs.Path(key),
@@ -1365,8 +1369,9 @@ object TxLog {
       val blocks = md.getBlocks
       var i = 0; var n = 0L
       while (i < blocks.size()) { n += blocks.get(i).getRowCount; i += 1 }
-      java.lang.Long.valueOf(n)
-    }).longValue()
+      sidecarRowsCache.put(key, n)
+      n
+    }
   }
 
   /** Upper bound on the active deleted-row count: the summed footer row

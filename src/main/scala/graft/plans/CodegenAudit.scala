@@ -30,9 +30,12 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * The audit walks the EXECUTED plan (AQE-final): mechanism 1 falls out of
   * the walk; mechanisms 2–3 are re-derived exactly the way `doExecute`
-  * decides them — `doCodeGen()` + `CodeGenerator.compile` (a cache hit for
-  * an already-executed plan, so auditing is cheap) compared against the
-  * same conf. `Verify` and `Bench` run this after every gated query and
+  * decides them — `doCodeGen()` + `CodeGenerator.compile` compared against
+  * the same conf. The compile is a cache hit for an already-executed plan
+  * only while the plan's classes are still in Spark's JVM-wide codegen
+  * cache (`spark.sql.codegen.cache.maxEntries`, sized by
+  * [[graft.core.GraftSession]]); then auditing is cheap, otherwise it
+  * re-compiles. `Verify` and `Bench` run this after every gated query and
   * print a loud `[codegen-audit]` line on any finding, so a kernel going
   * interpreted shows up in the round artifacts, not in a profiler three
   * weeks later.

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 
 import graft.runner.{MedallionPipeline, Pipeline}
@@ -139,16 +141,37 @@ class MedallionPipelineSpec extends SparkSpecBase {
     rep.getAs[Double]("overall_rejection_rate") should (be >= 0.0 and be <= 0.7)
   }
 
+  /** Runs `body`, returning whether it succeeded and how many classes
+    * Janino compiled meanwhile. */
+  private def compiling(body: => Boolean): (Boolean, Long) = {
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val k0 = compiled
+    val ok = body
+    (ok, compiled - k0)
+  }
+
+  /** Empties Spark's JVM-wide codegen cache, so the next run starts cold
+    * whatever other specs in this JVM compiled before. */
+  private def clearCodegenCache(): Unit = {
+    val accessor = CodeGenerator.getClass.getDeclaredMethod("cache")
+    accessor.setAccessible(true)
+    val cache = accessor.invoke(CodeGenerator) // private[spark] type
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
+
   test("idempotent re-run + backfill: per-run_date partitions are independent") {
     val raw = Files.createTempDirectory("graft_raw2").toString
     val out = Files.createTempDirectory("graft_out2").toString
     writeFixtures(raw)
     val p = MedallionPipeline(spark, raw, out, "2024-06-01",
       "2024-06-01 02:00:00", "run-a", maxRejectRate = 0.7)
-    p.run().succeeded shouldBe true
+    clearCodegenCache()
+    val (ok1, c1) = compiling(p.run().succeeded)
+    ok1 shouldBe true
     val n1 = spark.read.parquet(s"$out/gold/fact_dataset_owner_daily").count()
     n1 should be > 0L // 0==0 idempotency would be vacuous
-    p.run().succeeded shouldBe true
+    val (ok2, c2) = compiling(p.run().succeeded)
+    ok2 shouldBe true
     val n2 = spark.read.parquet(s"$out/gold/fact_dataset_owner_daily").count()
     n2 shouldBe n1
 
@@ -156,7 +179,18 @@ class MedallionPipelineSpec extends SparkSpecBase {
     // without touching the first
     val p2 = MedallionPipeline(spark, raw, out, "2024-06-02",
       "2024-06-02 02:00:00", "run-b", maxRejectRate = 0.7)
-    p2.run().succeeded shouldBe true
+    val (ok3, c3) = compiling(p2.run().succeeded)
+    ok3 shouldBe true
+
+    // a repeated DAG reuses its compiled classes (GraftSession sizes the
+    // codegen cache above the DAG's working set); a new run_date only
+    // re-compiles the classes that fold its date literal
+    withClue(s"classes compiled per run: first $c1, re-run $c2, new date $c3\n") {
+      c1 should be > 100L // more than Spark's default 100-entry cache
+      c2.toDouble should be <= 0.05 * c1
+      c3.toDouble should be <= 0.25 * c1
+    }
+
     val fact = spark.read.parquet(s"$out/gold/fact_dataset_owner_daily")
     fact.select("run_date").distinct().as[String].collect().sorted shouldBe
       Array("2024-06-01", "2024-06-02")
