@@ -11,9 +11,18 @@ import org.apache.spark.sql.functions._
   * args(0) (default 100000 users) and times a full pipeline run.
   * `codegen_compiles` counts the classes Janino compiled during the timed
   * run, so compile work shows in the end-to-end number instead of hiding
-  * in it.
+  * in it. `layer_s` sums the runner's task durations per medallion layer
+  * (tasks run concurrently, so the sum can exceed the wall time).
   */
 object PipelineBench {
+
+  /** The layer a DAG task belongs to, by name prefix; `check_sources` and
+    * `bronze_report` count as bronze. */
+  private def layerOf(task: String): String =
+    if (task.startsWith("silver")) "silver"
+    else if (task.startsWith("gold")) "gold"
+    else "bronze"
+
   def main(args: Array[String]): Unit = {
     val nUsers = if (args.nonEmpty) args(0).toInt else 100000
     val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -95,7 +104,11 @@ object PipelineBench {
         if (report.succeeded)
           spark.read.parquet(s"$out/gold/fact_dataset_owner_daily").count()
         else -1L
-      println(s"""{"metric":"pipeline_e2e","value":$secs,"unit":"sec","users":$nUsers,"datasets":$nDatasets,"fact_rows":$factRows,"codegen_compiles":$compiles,"succeeded":${report.succeeded}}""")
+      val layerSecs = Seq("bronze", "silver", "gold").map { l =>
+        val ms = report.results.filter(r => layerOf(r.name) == l).map(_.durationMs).sum
+        s""""$l":${ms / 1e3}"""
+      }.mkString("{", ",", "}")
+      println(s"""{"metric":"pipeline_e2e","value":$secs,"unit":"sec","users":$nUsers,"datasets":$nDatasets,"fact_rows":$factRows,"codegen_compiles":$compiles,"layer_s":$layerSecs,"succeeded":${report.succeeded}}""")
     } finally {
       spark.stop()
       // gigabytes of benchmark workspace must go even on a thrown run

@@ -3314,7 +3314,8 @@ object TxLog {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
     else alignToRecordedSchema(
       readFilesWithDvs(spark, path, kept, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones), snap)
+        columnMap = snap.columnMap, tombstones = snap.physTombstones,
+        explicitSchema = Some(physicalReadSchema(snap))), snap)
   }
 
   /** [lo, hi] of integral column `c` over the (batch-scale) `keys` frame,
@@ -4156,7 +4157,8 @@ object TxLog {
         snap.schema)
     else alignToRecordedSchema(
       readFilesWithDvs(spark, path, matching, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones), snap)
+        columnMap = snap.columnMap, tombstones = snap.physTombstones,
+        explicitSchema = Some(physicalReadSchema(snap))), snap)
   }
 
   /** DELETE whole partitions METADATA-ONLY (the Delta fast path for a

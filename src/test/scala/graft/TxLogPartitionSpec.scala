@@ -478,6 +478,27 @@ class TxLogPartitionSpec extends SparkSpecBase {
     TxLog.read(spark, path).columns should contain("score")
   }
 
+  test("readPruned and readPartitions serve the recorded schema after addColumn + a widening append") {
+    val path = freshPath()
+    TxLog.init(rows(0 until 100).withColumn("n", col("id").cast("int"))
+      .repartition(2), path, partitionBy = Seq("grp"))
+    TxLog.addColumn(spark, path, "score",
+      org.apache.spark.sql.types.LongType, 0L) // v1: metadata only
+    TxLog.append(rows(100 until 150).withColumn("n", col("id") * 1000000000L)
+      .withColumn("score", col("id") * 2), path, 1L) // v2: n int -> long
+    def same(got: org.apache.spark.sql.DataFrame,
+        want: org.apache.spark.sql.DataFrame): Unit = {
+      got.schema shouldBe want.schema
+      got.exceptAll(want).count() shouldBe 0L
+      want.exceptAll(got).count() shouldBe 0L
+    }
+    val inRange = col("id").between(90L, 120L)
+    same(TxLog.readPruned(spark, path, "id", 90L, 120L).filter(inRange),
+      TxLog.read(spark, path).filter(inRange))
+    same(TxLog.readPartitions(spark, path, col("grp") === 1L),
+      TxLog.read(spark, path).filter(col("grp") === 1L))
+  }
+
   test("multi-column partitioning: tuple split + string values with empty string") {
     val path = freshPath()
     val data = Seq(
