@@ -368,4 +368,47 @@ class TxLogDvSpec extends SparkSpecBase {
       bm.queryExecution.executedPlan.toString should include("graft_dv_alive")
     } finally TxLog.dvBitmapMinRows.set(saved)
   }
+
+  test("compact, purgeDeletes and the DV writers read with the recorded " +
+      "schema after an int -> bigint widening append") {
+    val path = freshPath()
+    TxLog.init(rows(0 until 100).withColumn("n", col("id").cast("int"))
+      .repartition(2), path)                                         // v0: n int
+    TxLog.append(rows(100 until 150).withColumn("n", col("id") * 1000000000L)
+      .repartition(2), path, 0L)                                     // v1: n bigint
+    TxLog.deleteWhereDV(spark, path, col("id") % 10 === 3, 1L)       // v2
+    TxLog.updateWhereDV(spark, path, col("id") === 5L,
+      Map("payload" -> lit("upd")), 2L)                              // v3
+    TxLog.replaceWhereKeysDV(spark, path, Seq(7L).toDF("id"), Seq("id"),
+      rows(7 until 8).withColumn("n", lit(-7L)), 3L)                 // v4
+    TxLog.mergeDV(spark, path, Seq(9L).toDF("sid"), Seq("id" -> "sid"),
+      matched = Seq(TxLog.MergeMatched(None, None)),
+      expectedVersion = 4L)                                          // v5
+    TxLog.purgeDeletes(spark, path, 5L)                              // v6
+    TxLog.compact(spark, path, 6L).version shouldBe 7L               // v7
+    val want = (0 until 150).filterNot(i => i % 10 == 3 || i == 9).map { i =>
+      (i.toLong, if (i == 5) "upd" else s"v$i",
+        if (i == 7) -7L else if (i < 100) i.toLong else i * 1000000000L)
+    }
+    TxLog.read(spark, path).select("id", "payload", "n")
+      .as[(Long, String, Long)].collect().sorted shouldBe want.sorted
+
+    // a metadata-only addColumn: compaction and purge move rows, they do
+    // not change the recorded schema or its nullability
+    val p2 = freshPath()
+    TxLog.init(rows(0 until 40).repartition(2), p2)                  // v0
+    TxLog.append(rows(40 until 60), p2, 0L)                          // v1
+    TxLog.addColumn(spark, p2, "score",
+      org.apache.spark.sql.types.LongType, 1L)                       // v2
+    TxLog.deleteWhereDV(spark, p2, col("id") === 3L, 2L)             // v3
+    val recorded = TxLog.snapshot(p2).schema
+    recorded("id").nullable shouldBe false
+    TxLog.purgeDeletes(spark, p2, 3L)                                // v4
+    TxLog.compact(spark, p2, 4L).version shouldBe 5L                 // v5
+    TxLog.snapshot(p2).schema shouldBe recorded
+    val got = TxLog.read(spark, p2)
+    got.columns.toSeq shouldBe recorded.fieldNames.toSeq
+    got.filter(col("score").isNotNull).count() shouldBe 0L
+    ids(got) shouldBe (0 until 60).filterNot(_ == 3).map(_.toLong).toArray
+  }
 }

@@ -74,6 +74,31 @@ class TxLogProtocolSpec extends SparkSpecBase {
     intercept[TxLog.OlderLogFormatException](TxLog.snapshot(path))
   }
 
+  /** Version 0 of a two-row (id, payload) table as the protocol-1 log
+    * format wrote it: base64-wrapped schema, commit info and stats.
+    */
+  private val Protocol1Record = Seq(
+    """{"version":0,"protocol":1,"tsMillis":1700000000000,"schemaB64":"""",
+    """eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoi""",
+    """bG9uZyIsIm51bGxhYmxlIjpmYWxzZSwibWV0YWRhdGEiOnt9fSx7Im5hbWUiOiJw""",
+    """YXlsb2FkIiwidHlwZSI6InN0cmluZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0""",
+    """YSI6e319XX0=","info":"SU5JVA==;","statsB64":"cGFydC0wMDAwMC0xMWR""",
+    """iZDgyOS01YmEzLTQ1ZDktOTFlNS03ODEyMjI1MmFhMTQtYzAwMC5zbmFwcHkucGF""",
+    """ycXVldAkyCTcxMAlhV1E9LGwsMCwxLDIsLDtjR0Y1Ykc5aFpBPT0scywwLCwscFl""",
+    """RPT0scFlnPT0J","add":["part-00000-11dbd829-5ba3-45d9-91e5-781222""",
+    """52aa14-c000.snappy.parquet"],"remove":[]}""").mkString
+
+  test("a protocol-1 record (base64 schema and stats) is refused on every read path") {
+    val path = freshPath()
+    TxLog.init(rows(0 until 10), path)
+    val log = new java.io.File(path, TxLog.LogDirName)
+    java.nio.file.Files.write(new java.io.File(log, f"${0L}%020d.json").toPath,
+      Protocol1Record.getBytes("UTF-8"))
+    java.nio.file.Files.delete(
+      new java.io.File(log, f"${0L}%020d.checkpoint.parquet").toPath)
+    refusedOnEveryReadPath(path)
+  }
+
   test("an unstamped checkpoint read at exactly its version is refused on every read path") {
     val path = freshPath()
     TxLog.init(rows(0 until 10), path)

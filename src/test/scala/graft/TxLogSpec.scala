@@ -578,6 +578,24 @@ class TxLogSpec extends SparkSpecBase {
       viaCkpt.files.map(f => viaCkpt.stats(f).rows).sum
     df.filter(col("dv").isNotNull).select("file").as[String]
       .collect().toSet shouldBe viaCkpt.dvs.keySet
+    // the per-file column stats are JSON strings Spark's own from_json
+    // reads: checkpoint stats are consumable without a driver collect
+    val colStatsType = org.apache.spark.sql.types.MapType(
+      org.apache.spark.sql.types.StringType,
+      new org.apache.spark.sql.types.StructType().add("typ", "string")
+        .add("nulls", "long").add("min", "long").add("max", "long")
+        .add("strMin", "string").add("strMax", "string"))
+    val fromJson = df
+      .select(col("file"), col("rows"),
+        explode(from_json(col("cols"), colStatsType)).as(Seq("c", "s")))
+      .select("file", "rows", "c", "s.min", "s.max", "s.strMin", "s.strMax")
+      .as[(String, Long, String, Option[Long], Option[Long], Option[String],
+        Option[String])].collect().sorted
+    fromJson should not be empty
+    fromJson.toSeq shouldBe TxLog.resolve(path, 10L).stats.toSeq.flatMap {
+      case (f, fs) => fs.cols.map { case (c, cs) =>
+        (f, fs.rows, c, cs.min, cs.max, cs.strMin, cs.strMax) }
+    }.sorted
     // vacuum's LOAD-BEARING checkpoint is the parquet kind too: history
     // below the horizon gone, retained versions resolve through it
     TxLog.append(rows(2000 until 2010), path, 10L) // v11
@@ -757,7 +775,7 @@ class TxLogSpec extends SparkSpecBase {
     // plain appends/deletes CARRY the watermark forward untouched
     val s5 = TxLog.append(rows(40 until 50), path, 3L)
     s5.txns shouldBe Map("appA" -> 1L, "appB" -> 0L)
-    // empty appId would serialize unreadably — refused before publishing
+    // an empty appId names no writer — refused before publishing
     intercept[IllegalArgumentException] {
       TxLog.appendIfNew(rows(0 until 5), path, "", 0L, 4L)
     }
