@@ -2779,8 +2779,9 @@ object TxLog {
     val dropping = all.dropRight(retainVersions)
     // STREAMING-LAG GUARD: a lagging TxLog source's next batch needs the
     // files of every version it has not yet committed — `readerFloor` is
-    // that consumer's oldest still-needed version (its handed-out cursor
-    // + 1, or a startingVersion). Vacuuming versions AT OR ABOVE the
+    // that consumer's oldest still-needed version (its last committed
+    // end offset + 1, `TxLogSource.committedReaderFloor`, or a
+    // startingVersion). Vacuuming versions AT OR ABOVE the
     // floor breaks the consumer's replay window (the documented
     // vacuum↔source coupling); fire the structured alert BEFORE anything
     // drops so operators see it while the read still works. The vacuum

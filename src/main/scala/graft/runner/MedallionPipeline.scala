@@ -31,27 +31,12 @@ final case class MedallionPipeline(
     ingestTs: String,
     pipelineRunId: String,
     maxRejectRate: Double = 0.10,
-    scalableSks: Boolean = true,
     publishBucketedServing: Boolean = false,
     servingBuckets: Int = 32,
     catalogDb: Option[String] = None,
     alertSink: Option[Alerts.Sink] = None,
     taskParallelism: Int = 6
 ) {
-
-  /** SK assignment mode for all gold dims. Default is the scalable path
-    * (range-sort + zipWithIndex — no single-partition window); the two
-    * modes produce identical keys under the total orderings used here
-    * (oracle-proven by q_w4b vs q_w4), so `scalableSks = false` exists only
-    * for bit-parity debugging against the reference's row_number form.
-    */
-  private def assignSks(
-      df: DataFrame,
-      ordering: Seq[org.apache.spark.sql.Column],
-      skCol: String
-  ): DataFrame =
-    if (scalableSks) SurrogateKeys.scalableMode(df, ordering, skCol)
-    else SurrogateKeys.referenceMode(df, ordering, skCol)
 
   private def bronzePath(table: String)  = s"$outDir/bronze/$table/run_date=$runDate"
   private def rejectPath(table: String)  = s"$outDir/_rejects/$table/run_date=$runDate"
@@ -217,7 +202,7 @@ final case class MedallionPipeline(
         .withColumn("change_ts", coalesce(col("signup_ts"), col("ingest_ts")))
         .select("user_id", "change_ts", "user_name", "country_code"),
       Seq("user_id"), "change_ts", Seq("user_name", "country_code"))
-    val keyed = assignSks(
+    val keyed = SurrogateKeys.scalableMode(
       hist, Seq(col("effective_start_ts"), col("user_id")), "user_sk")
     val unknown = spark.createDataFrame(
       java.util.List.of(
@@ -258,7 +243,7 @@ final case class MedallionPipeline(
         .withColumn("change_ts", coalesce(col("updated_ts"), col("created_ts"), col("ingest_ts")))
         .select("dataset_id", "change_ts", "dataset_title", "owner_user_id", "is_private"),
       Seq("dataset_id"), "change_ts", Seq("dataset_title", "owner_user_id", "is_private"))
-    val keyed = assignSks(
+    val keyed = SurrogateKeys.scalableMode(
       hist, Seq(col("effective_start_ts"), col("dataset_id")), "dataset_sk")
     write(keyed.withColumn("etl_run_date", lit(runDate)), goldPath("dim_dataset"))
   }
@@ -269,7 +254,7 @@ final case class MedallionPipeline(
         .withColumn("change_ts", coalesce(col("start_ts"), col("ingest_ts")))
         .select("competition_id", "change_ts", "title", "category", "prize_money"),
       Seq("competition_id"), "change_ts", Seq("title", "category", "prize_money"))
-    val keyed = assignSks(
+    val keyed = SurrogateKeys.scalableMode(
       hist, Seq(col("effective_start_ts"), col("competition_id")), "competition_sk")
     write(keyed.withColumn("etl_run_date", lit(runDate)), goldPath("dim_competition"))
   }
@@ -277,7 +262,7 @@ final case class MedallionPipeline(
   /** dim_tag is SCD1 (requirements/...:85): distinct tags + dense SKs. */
   private def goldDimTag(): Unit = {
     val tags = readSilver("tags").select("tag").distinct()
-    val keyed = assignSks(tags, Seq(col("tag")), "tag_sk")
+    val keyed = SurrogateKeys.scalableMode(tags, Seq(col("tag")), "tag_sk")
     write(keyed.withColumn("etl_run_date", lit(runDate)), goldPath("dim_tag"))
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.graftbridge.StreamingSourceBridge
@@ -15,7 +16,7 @@ import graft.gold.TxLog
   * real Delta-source shape (round 11 proved the semantics with a
   * copy-based replay harness; this replaces it as infrastructure):
   *
-  *  - **Offset = log version.** `getOffset` resolves the table's newest
+  *  - **Offset = log version.** `latestOffset` resolves the table's newest
   *    committed version (checkpoint-hint probe, O(commits since
   *    checkpoint)); a micro-batch covers the half-open version range
   *    `(start, end]` and reads exactly those commits' ADD files **in
@@ -35,15 +36,13 @@ import graft.gold.TxLog
   *    [[graft.gold.TxLog.changes]].
   *  - **Admission control.** `maxVersionsPerTrigger` (default 1) bounds how
   *    many commits one micro-batch covers — the Delta
-  *    `maxFilesPerTrigger` role. Rate limiting makes `getOffset` stateful
-  *    (it must advance from what was already handed out, not from the
-  *    table head), so the handed-out watermark is persisted under the
-  *    engine-provided source-metadata dir and recovered on restart — the
-  *    FileStreamSource pattern; without it a restarted source could hand
-  *    out an offset BELOW the engine's committed one and regress the
-  *    offset log. The persisted value is a lower-bound cursor, never a
-  *    correctness input: batch CONTENT is always derived from the version
-  *    records alone.
+  *    `maxFilesPerTrigger` role. A rate-limited source must advance from
+  *    the last offset handed out, not from the table head; as a
+  *    `SupportsAdmissionControl` source it is given that offset by the
+  *    engine (`latestOffset(start, limit)`, `start` read from the offset
+  *    log on restart), so it writes nothing of its own under the
+  *    checkpoint. Progress reports the table head as `latestOffset`:
+  *    `latestOffset - endOffset` is the consumer's lag in versions.
   *
   * Vacuum coupling (documented, inherent): a lagging reader's next batch
   * references files only retained versions hold — vacuum with a horizon
@@ -310,13 +309,13 @@ object TxLogSource {
     * (default 0 = the whole table — Delta's same-named option). The floor
     * is a fresh-start device: a resumed query's checkpointed offsets take
     * over, and RAISING it on an existing checkpoint skips ahead to the new
-    * floor (versions between the old cursor and the new floor are never
-    * served).
+    * floor (versions between the latest logged offset and the new floor are
+    * never served).
     */
   val StartingVersionKey = "startingVersion"
 
   /** `maxBytesPerTrigger` (Delta's same-named option): soft byte budget
-    * per micro-batch — `getOffset` stops admitting versions once the
+    * per micro-batch — `latestOffset` stops admitting versions once the
     * accumulated data-file bytes of the versions already admitted would
     * exceed it, but always admits AT LEAST ONE version (a budget below
     * the smallest commit must not starve the stream — Delta's
@@ -338,7 +337,7 @@ object TxLogSource {
     * UNLESS a byte budget alone was given, where a 1-version cap would
     * silently make the budget inert (the byte walk then bounds the
     * batch; the cap is a large overflow-safe sentinel, not
-    * Long.MaxValue, because `maxHandedOut + cap` must not wrap).
+    * Long.MaxValue, because `start + cap` must not wrap).
     */
   private[streaming] def maxVersionsOf(parameters: Map[String, String],
       name: String): Long = {
@@ -389,10 +388,10 @@ object TxLogSource {
     * restart redelivers everything above the last commit, so versions at
     * or above this floor must outlive vacuum. Pass the result as
     * `TxLog.vacuum(readerFloor = ...)` to arm the lag alert for a real
-    * consumer. NOT the handed-out cursor + 1: offsets are logged BEFORE
-    * their batch commits, so versions in (lastCommitted, cursor] are
-    * re-read on restart — a cursor-based floor would under-protect
-    * exactly them. Reads the engine's v1 checkpoint layout
+    * consumer. NOT the latest logged offset + 1: offsets are logged BEFORE
+    * their batch commits, so versions in (lastCommitted, latestLogged] are
+    * re-read on restart — a floor above the last commit would
+    * under-protect exactly them. Reads the engine's v1 checkpoint layout
     * (`commits/<n>`, `offsets/<n>`: "v1", metadata, one offset line per
     * source) — the stable public format FileStreamSource queries have
     * used across Spark versions. A checkpoint with no commits floors at
@@ -474,23 +473,14 @@ object TxLogSource {
 
 /** The version-offset machinery shared by both TxLog streaming sources
   * ([[TxLogSource]] append rows, [[TxLogCdfSource]] change rows): offsets
-  * are log versions; `getOffset` advances at most `maxVersionsPerTrigger`
-  * past the handed-out cursor; the cursor is persisted (atomic tmp+move)
-  * under the engine-provided source-metadata dir so a restarted,
-  * rate-limited source never re-offers an offset below the engine's
-  * committed one (regressing the offset log). The cursor is a lower-bound
-  * cursor only; batch CONTENT always derives from the version records.
-  *
-  * Cursor-loss safety: the cursor is written BEFORE the engine can log
-  * the offset it bounds, so on any intact checkpoint the cursor is at
-  * least as new as the newest logged offset. A MISSING cursor beside a
-  * NON-EMPTY engine offsets log therefore proves partial checkpoint
-  * corruption — construction fails with a named error rather than
-  * starting from −1, which would hand the engine an offset BELOW its
-  * committed one and silently re-read (double-count) already-consumed
-  * versions. An unreadable/garbage cursor fails the same way. `getBatch`
-  * additionally advances the cursor from the engine's own checkpointed
-  * range, covering the restart-with-uncommitted-batch recovery path.
+  * are log versions, and the engine's offset log is the only record of a
+  * stream's position. The source is a V1 `Source` with
+  * `SupportsAdmissionControl`, so `MicroBatchExecution` calls
+  * `latestOffset(start, limit)` with its own start offset (the last
+  * logged end, or null on a fresh query) instead of `getOffset`; the
+  * source advances at most `maxVersionsPerTrigger` past that start and
+  * keeps no position of its own. Batch CONTENT always derives from the
+  * version records.
   */
 abstract class TxLogVersionedSource(
     protected val spark: SparkSession,
@@ -498,7 +488,8 @@ abstract class TxLogVersionedSource(
     metadataPath: String,
     maxVersionsPerTrigger: Long,
     startingVersion: Long,
-    maxBytesPerTrigger: Option[Long] = None) extends Source {
+    maxBytesPerTrigger: Option[Long] = None)
+  extends Source with SupportsAdmissionControl {
 
   /** The COLUMN MAPPING pinned at query start (round-14 verdict item 3 —
     * streaming over renamed/dropped tables): batch files are read under
@@ -527,82 +518,7 @@ abstract class TxLogVersionedSource(
     */
   protected def versionBytes(v: Long): Long
 
-  // The engine passes metadataPath as a Hadoop URI STRING
-  // ("file:/ckpt/sources/0" locally, scheme-qualified on cluster
-  // filesystems) — all cursor IO goes through the Hadoop FileSystem API.
-  // GOTCHA (caught by the lost-cursor spec): `new java.io.File(uriString)`
-  // silently treats "file:/..." as a RELATIVE path and writes under the
-  // process CWD.
-  private val metadataHPath = new org.apache.hadoop.fs.Path(metadataPath)
-  private val cursorPath =
-    new org.apache.hadoop.fs.Path(metadataHPath, "graft-txlog-cursor")
-  private lazy val fs =
-    cursorPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  @volatile private var maxHandedOut: Long =
-    math.max(readCursor(), startingVersion - 1)
-
-  /** The cursor as restored at construction — ranges at or below it can
-    * only be the engine's RESTART-INITIALIZATION `getBatch` calls (see
-    * [[getBatch]]); fresh batches always end above it.
-    */
-  private val initialCursor: Long = maxHandedOut
-
-  /** The engine's offsets log lives two levels above the source-metadata
-    * dir (`<ckpt>/sources/<i>` → `<ckpt>/offsets`). Checkpoint-layout
-    * knowledge, used ONLY for the corruption check — never to read
-    * offsets.
-    */
-  private def engineOffsetsLogNonEmpty: Boolean = {
-    val offsets = Option(metadataHPath.getParent).flatMap(p =>
-      Option(p.getParent)).map(new org.apache.hadoop.fs.Path(_, "offsets"))
-      .getOrElse(return false)
-    fs.exists(offsets) && fs.listStatus(offsets)
-      .exists(_.getPath.getName.forall(_.isDigit))
-  }
-
-  private def readCursor(): Long = {
-    if (!fs.exists(cursorPath)) {
-      if (engineOffsetsLogNonEmpty) throw new IllegalStateException(
-        s"graft-txlog source: handed-out cursor missing at $cursorPath " +
-          "but the query checkpoint has logged offsets - the checkpoint " +
-          "is partially corrupted. Starting fresh here could regress the " +
-          "offset log and double-read versions; restore the checkpoint " +
-          "or start a new one.")
-      -1L
-    } else
-      try {
-        val in = fs.open(cursorPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      } catch {
-        case scala.util.control.NonFatal(e) => throw new IllegalStateException(
-          s"graft-txlog source: handed-out cursor at $cursorPath is " +
-            s"unreadable ($e) - refusing to guess a rate-limit base; " +
-            "restore the checkpoint or start a new one.")
-      }
-  }
-
-  /** Stage + rename-with-OVERWRITE (FileContext — atomic on local/HDFS;
-    * object stores get the same fail-safe as everywhere else in the log:
-    * a crash window can only LOSE the cursor, which [[readCursor]] turns
-    * into a loud corruption error, never into silent re-reads).
-    */
-  private def writeCursor(v: Long): Unit = {
-    if (!fs.exists(metadataHPath)) { fs.mkdirs(metadataHPath); () }
-    val tmp = new org.apache.hadoop.fs.Path(metadataHPath, ".cursor.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      cursorPath.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, cursorPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def advanceCursor(v: Long): Unit =
-    if (v > maxHandedOut) { maxHandedOut = v; writeCursor(v) }
-
-  private def versionOf(o: OffsetV1): Long = o.json.trim.toLong
+  private def versionOf(o: OffsetV2): Long = o.json.trim.toLong
 
   /** The schema this source PINNED at query start (both sources read
     * every batch file with it — pre-evolution files null-fill).
@@ -700,41 +616,62 @@ abstract class TxLogVersionedSource(
         "schema (pre-evolution files null-fill).")
   }
 
-  final override def getOffset: Option[OffsetV1] =
-    TxLog.currentVersion(tablePath).map { cur =>
-      val capped = math.min(cur, maxHandedOut + maxVersionsPerTrigger)
-      val end = maxBytesPerTrigger match {
-        case None => capped
+  /** The table head the last [[latestOffset]] call saw; None before the
+    * first call. */
+  @volatile private var headSeen: Option[Long] = None
+
+  /** Admits at most `maxVersionsPerTrigger` versions past the engine's
+    * start offset (or past `startingVersion - 1` on a fresh query), cut
+    * short by the `maxBytesPerTrigger` walk. `limit` is ignored: the
+    * options above are this source's only admission control.
+    */
+  final override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
+    val cur = TxLog.currentVersion(tablePath)
+    headSeen = cur
+    cur.map { head =>
+      val from = math.max(Option(start).map(versionOf).getOrElse(-1L),
+        startingVersion - 1)
+      val capped = math.min(head, from + maxVersionsPerTrigger)
+      maxBytesPerTrigger match {
+        case None => LongOffset(capped)
         case Some(budget) =>
           // admit versions until the budget binds — but always at least
           // one (a budget below the smallest commit must not starve the
           // stream). Record-metadata walk only; O(admitted versions).
-          var v = maxHandedOut
+          var v = from
           var bytes = 0L
           var stop = false
           while (!stop && v < capped) {
             val nb = versionBytes(v + 1)
-            if (v > maxHandedOut && bytes + nb > budget) stop = true
+            if (v > from && bytes + nb > budget) stop = true
             else { v += 1; bytes += nb }
           }
-          v
+          LongOffset(v)
       }
-      advanceCursor(end)
-      LongOffset(end)
-    }
+    }.orNull
+  }
+
+  /** The table head at the last trigger: progress `latestOffset` minus
+    * `endOffset` is the consumer's lag in versions. */
+  override def reportLatestOffset(): OffsetV2 = headSeen.map(LongOffset(_)).orNull
+
+  override def getOffset: Option[OffsetV1] = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   /** The engine's last COMMITTED batch end offset (a log version), read
-    * from the checkpoint this source's metadata dir lives under — same
-    * layout knowledge as the corruption check, used ONLY to recognize
-    * already-committed ranges. None when unreadable (fail open to the
-    * normal batch path, whose own errors are loud).
+    * from the checkpoint this source's metadata dir (`<ckpt>/sources/<i>`)
+    * lives under, used ONLY to recognize already-committed ranges. None
+    * when unreadable (fail open to the normal batch path, whose own errors
+    * are loud).
     */
   private def engineCommittedEnd: Option[Long] =
     try {
-      val root = Option(metadataHPath.getParent).flatMap(p =>
+      val dir = new org.apache.hadoop.fs.Path(metadataPath)
+      val root = Option(dir.getParent).flatMap(p =>
         Option(p.getParent)).getOrElse(return None)
-      val idx = metadataHPath.getName.toInt
-      TxLogSource.lastCommittedEndOffset(fs, root, idx)
+      TxLogSource.lastCommittedEndOffset(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        root, dir.getName.toInt)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   final override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
@@ -744,7 +681,6 @@ abstract class TxLogVersionedSource(
     val from = math.max(start.map(versionOf).getOrElse(-1L),
       startingVersion - 1) // exclusive
     val to = versionOf(end) // inclusive
-    advanceCursor(math.max(from, to)) // engine range is authoritative
     // RESTART-INITIALIZATION calls: on every restart MicroBatchExecution
     // re-calls getBatch for the first logged batch's range even when that
     // batch is COMMITTED — the frame is never executed. Before vacuum
@@ -752,9 +688,9 @@ abstract class TxLogVersionedSource(
     // versions the eager record parse would CRASH a perfectly healthy
     // restart (caught by the committedReaderFloor spec). A range ending
     // at or below the engine's own committed offset was fully delivered:
-    // serving it empty is exact, and the check costs nothing in steady
-    // state (fresh batches always end above the restored cursor).
-    if (to <= initialCursor && engineCommittedEnd.exists(_ >= to))
+    // serving it empty is exact. The engine makes these calls before its
+    // first latestOffset, so steady-state batches never read the checkpoint.
+    if (headSeen.isEmpty && engineCommittedEnd.exists(_ >= to))
       StreamingSourceBridge.emptyStreamingBatch(spark, schema)
     else batchFor(from, to)
   }

@@ -220,31 +220,49 @@ class TxLogSourceSpec extends SparkSpecBase {
     applied() shouldBe (10L until 30L).toArray
   }
 
-  test("a lost admission-control cursor beside logged offsets fails loudly, never double-reads") {
-    // the cursor is written BEFORE the engine logs the offset it bounds, so
-    // cursor-missing + offsets-present can only be partial checkpoint
-    // corruption. Starting from -1 there would hand the engine an offset
-    // BELOW its committed one (regressing the offset log and re-reading
-    // versions) - the source must refuse instead.
+  test("the offset log is the only stream position: nothing under <ckpt>/sources, and a restart without it resumes exactly") {
+    // the engine hands a SupportsAdmissionControl source its start offset
+    // from the offset log, so the source keeps no position file; a
+    // checkpoint whose sources dir is gone resumes at the next version
     val path = freshDir("txsrc") + "/t"
     val work = freshDir("txsrc_work")
     TxLog.init(rows(0 until 10), path)
     TxLog.append(rows(10 until 20), path, 0L)
     val out = s"$work/out"; val ckpt = s"$work/ckpt"
-    drain(path, out, ckpt)
+    drain(path, out, ckpt, maxVersions = 1L)
     spark.read.parquet(out).count() shouldBe 20L
-    // sabotage: delete ONLY the cursor, keep the engine checkpoint
-    val cursors = Option(new java.io.File(s"$ckpt/sources").listFiles())
-      .getOrElse(Array.empty)
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-      .filter(_.getName == "graft-txlog-cursor")
-    cursors should not be empty
-    cursors.foreach(f => assert(f.delete()))
+    def filesUnder(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) filesUnder(f) else Seq(f))
+    filesUnder(new java.io.File(ckpt)).map(_.getName) should not contain
+      "graft-txlog-cursor"
+    val sources = new java.io.File(ckpt, "sources")
+    filesUnder(sources) shouldBe empty
+    org.apache.commons.io.FileUtils.deleteDirectory(sources)
     TxLog.append(rows(20 until 30), path, 1L)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      drain(path, out, ckpt)
-    }
-    e.getMessage should include("partially corrupted")
+    drain(path, out, ckpt, maxVersions = 1L)
+    spark.read.parquet(out).select("id").as[Long].collect().sorted shouldBe
+      (0L until 30L).toArray
+    batchCount(ckpt) shouldBe 3
+  }
+
+  test("progress reports the table head as latestOffset: latestOffset - endOffset is the lag in versions") {
+    val path = freshDir("txsrc") + "/t"
+    val work = freshDir("txsrc_work")
+    TxLog.init(rows(0 until 10), path)
+    TxLog.append(rows(10 until 20), path, 0L)
+    TxLog.append(rows(20 until 30), path, 1L)
+    val child = spark.newSession()
+    val q = graft.streaming.EventStream
+      .streamTxLogTable(child, path, maxVersionsPerTrigger = 1L)
+      .writeStream.format("parquet").option("path", s"$work/out")
+      .option("checkpointLocation", s"$work/ckpt")
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val first = q.recentProgress.head.sources.head
+    first.endOffset shouldBe "0"
+    first.latestOffset shouldBe "2"
+    q.recentProgress.last.sources.head.latestOffset shouldBe "2"
   }
 
   test("partitionFilter: the stream serves only matching partitions' adds, file-pruned") {
