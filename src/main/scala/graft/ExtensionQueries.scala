@@ -357,22 +357,22 @@ object ExtensionQueries {
   }
 
   /** STRING data skipping through the commit log (library: gold.TxLog
-    * truncated string stats + plans.RewriteTxLogStatsScan — the Delta
+    * truncated string stats + gold.TxLogFileIndex — the Delta
     * truncated-string-stats shape): a priority-clustered two-version
-    * history is read through the ARMED child session with a string-range
-    * filter; the rule prunes files whose [strMin, strMax] box (UTF8
-    * binary order, truncation-sound bounds) cannot satisfy it. The
+    * history is read with a plain string-range filter; the file index
+    * prunes files whose [strMin, strMax] box (UTF8 binary order,
+    * truncation-sound bounds) cannot satisfy it. The
     * oracle recomputes the slice in closed form: an unsound string skip
     * (wrong collation order, a truncated bound used as if exact) or a
     * stats/record mismatch all hash-mismatch. TxLogStatsRuleSpec pins
     * that pruning actually fires and that truncated bounds stay sound on
     * supplementary-plane (emoji-adjacent) boundaries.
     */
-  private def qTxlogStatsString(s0: SparkSession, dir: String): DataFrame = {
+  private def qTxlogStatsString(s: SparkSession, dir: String): DataFrame = {
     import graft.gold.TxLog
     val path = "/tmp/graft_roundtrip/txlog_orders_statsstring"
     graft.core.Fs.rmTree(new java.io.File(path))
-    val o = T(s0, dir).orders.select(col("o_orderkey"), col("o_custkey"),
+    val o = T(s, dir).orders.select(col("o_orderkey"), col("o_custkey"),
       col("o_orderpriority"),
       round(col("o_totalprice") * 100).cast("long").as("cents"))
     TxLog.init(o.filter(col("o_custkey") % 4 === 0)
@@ -380,8 +380,6 @@ object ExtensionQueries {
     TxLog.append(o.filter(col("o_custkey") % 4 === 1)
       .repartitionByRange(4, col("o_orderpriority"), col("o_orderkey")),
       path, expectedVersion = 0L)
-    val s = s0.newSession()
-    s.conf.set(graft.plans.RewriteTxLogStatsScan.PathKey, path)
     TxLog.read(s, path)
       .filter(col("o_orderpriority") >= "2-HIGH" &&
         col("o_orderpriority") <= "3-MEDIUM")
@@ -538,24 +536,20 @@ object ExtensionQueries {
       .withColumn("files_pruned", lit(kept.size < total))
   }
 
-  /** AUTOMATIC log-native data skipping (library:
-    * plans.RewriteTxLogStatsScan over gold.TxLog's per-add-file stats —
-    * the planner-side consumer of the stats the commit log records, the
-    * Delta data-skipping-on-scan shape): the q_o_txlog_stats_prune
-    * history is read back through a PLAIN `TxLog.read(...).filter(...)`
-    * on a session with `spark.graft.txlogStats.path` armed — no manual
-    * readPruned — and the injected optimizer rule rewrites the scan to
-    * only the files whose log-recorded [min, max] can satisfy the
-    * filter, zero extra jobs. Oracle recomputes the slice in closed
+  /** AUTOMATIC log-native data skipping (library: gold.TxLogFileIndex
+    * over gold.TxLog's per-add-file stats — the planner-side consumer of
+    * the stats the commit log records, the Delta data-skipping-on-scan
+    * shape): the q_o_txlog_stats_prune history is read back through a
+    * PLAIN `TxLog.read(...).filter(...)` — no manual readPruned — and the
+    * scan reads only the files whose log-recorded [min, max] can satisfy
+    * the filter, zero extra jobs. Oracle recomputes the slice in closed
     * form: an unsound skip loses rows and hash-mismatches;
     * TxLogStatsRuleSpec separately asserts the scan REALLY reads fewer
-    * files and the unarmed session never prunes.
+    * files.
     */
-  private def qTxlogStatsAuto(s0: SparkSession, dir: String): DataFrame = {
+  private def qTxlogStatsAuto(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_roundtrip/txlog_orders_statsauto"
-    txlogBuild(s0, dir, path) // init %4=0 range-clustered, append %4=1, delete 5-LOW
-    val s = s0.newSession()
-    s.conf.set(graft.plans.RewriteTxLogStatsScan.PathKey, path)
+    txlogBuild(s, dir, path) // init %4=0 range-clustered, append %4=1, delete 5-LOW
     graft.gold.TxLog.read(s, path)
       .filter(col("o_orderkey") >= 1000L && col("o_orderkey") <= 2000L)
       .groupBy("o_orderpriority")
@@ -710,23 +704,20 @@ object ExtensionQueries {
       .withColumn("cdf_identical", lit(cdfIdentical))
   }
 
-  /** STATS PRUNING × DELETION VECTORS (library: plans.RewriteTxLogStats
-    * Scan over a VECTORED table — verdict item 4: the two features must
+  /** STATS PRUNING × DELETION VECTORS (library: gold.TxLogFileIndex
+    * over a VECTORED table — verdict item 4: the two features must
     * compose, not silently disarm each other): the stats-auto history
-    * with the delete taken as a SOFT delete is read through the armed
-    * session with a range filter — pushdown restores the
-    * Filter-over-scan shape below the DV anti-join, the rule prunes the
-    * DATA side, and the vectors still apply. Oracle recomputes the slice
+    * with the delete taken as a SOFT delete is read with a range filter
+    * — pushdown carries it below the DV anti-join, the file index prunes
+    * the DATA side, and the vectors still apply. Oracle recomputes the slice
     * in closed form (identical to the rewriting-delete gate — an
     * unsound prune OR an unapplied vector both hash-mismatch);
     * TxLogStatsRuleSpec separately asserts fewer files are read WITH the
     * anti-join still in the plan.
     */
-  private def qTxlogStatsDv(s0: SparkSession, dir: String): DataFrame = {
+  private def qTxlogStatsDv(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_roundtrip/txlog_orders_statsdv"
-    txlogBuildDv(s0, dir, path)
-    val s = s0.newSession()
-    s.conf.set(graft.plans.RewriteTxLogStatsScan.PathKey, path)
+    txlogBuildDv(s, dir, path)
     graft.gold.TxLog.read(s, path)
       .filter(col("o_orderkey") >= 1000L && col("o_orderkey") <= 2000L)
       .groupBy("o_orderpriority")

@@ -18,6 +18,11 @@ import org.apache.spark.sql.functions._
   * At 100 TB the index is ~10⁵–10⁶ rows (one per file) against ~10¹¹ data
   * rows — collecting the surviving FILE LIST to the driver is exactly what
   * every table format's planner does.
+  *
+  * This is the skipping index for PLAIN parquet directories, which have
+  * no log. A TxLog table skips through the stats its own commits record
+  * ([[TxLogFileIndex]], on every read) — a sidecar there would go stale
+  * at the next commit.
   */
 object StatsIndex {
 

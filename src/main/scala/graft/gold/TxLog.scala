@@ -64,10 +64,10 @@ import com.fasterxml.jackson.databind.node.{NullNode, ObjectNode, TextNode}
   *    re-create the table) — no read path guesses at an older shape.
   *  - **DELETE without eager rewrite of everything**: `deleteWhere` rewrites
   *    ONLY the files that contain matching rows. Touched-file discovery is
-  *    ONE distributed job over all candidate files (`input_file_name()`
-  *    distinct — never a per-file driver loop, which at 10⁵–10⁶ files
-  *    would serialize job-launch latency), optionally pre-pruned by the
-  *    table's [[StatsIndex]] min/max when a `_graft_stats` dir exists.
+  *    ONE distributed job over the snapshot's files
+  *    (`_metadata.file_name` distinct — never a per-file driver loop,
+  *    which at 10⁵–10⁶ files would serialize job-launch latency), pruned
+  *    by the log's own per-file stats like every read.
   *  - **Bounded log discovery**: every [[CheckpointInterval]] commits the
   *    newest version number is checkpointed to `_last_checkpoint`
   *    (Delta's same-named hint file); `currentVersion` probes forward from
@@ -78,13 +78,13 @@ import com.fasterxml.jackson.databind.node.{NullNode, ObjectNode, TextNode}
   *  - **Column-level stats IN the log** (Delta's `stats`-on-add): every
   *    data-writing commit records per-file min/max/nullCount for the
   *    stats-eligible columns in its OWN version record (canonical longs —
-  *    [[ColStats]]), checkpoints persist the accumulated map, and
-  *    [[readPruned]] / [[statsPrunedFilesCanonical]] skip files with
-  *    ZERO jobs. Unlike the `_graft_stats` sidecar, log stats can never
-  *    be stale relative to the version being read — they are
-  *    transactionally consistent at every time-travel version, and
-  *    DELETE/MERGE touched-file discovery pre-prunes through them
-  *    automatically.
+  *    [[ColStats]]) and checkpoints persist the accumulated map. Every
+  *    data-file scan goes through one [[TxLogFileIndex]] over the
+  *    snapshot, which skips the files whose stats prove a pushed filter
+  *    false with ZERO jobs — plain reads, time travel, the change feed,
+  *    the DML probes and the stream batches alike. Log stats can never
+  *    be stale relative to the version being read: they ride in the
+  *    commit that adds their files.
   *  - **CHECK constraints** (Delta invariants): [[addConstraint]] /
   *    [[dropConstraint]] DDL rides in the log; every row-adding commit is
   *    validated in one distributed pass and refused atomically (named
@@ -944,9 +944,7 @@ object TxLog {
     if (snap.files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
     else alignToRecordedSchema(
-      readFilesWithDvs(spark, path, snap.files, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones,
-        explicitSchema = physicalReadSchema(snap)), snap)
+      readFilesWithDvs(spark, path, snap.files, snap), snap)
   }
 
   /** Null-fill columns the RECORDED schema declares but no data file
@@ -1128,27 +1126,28 @@ object TxLog {
     }.reduce(_.unionAll(_))
       .select(col("file").as(DvFileCol), col("row_idx").as(DvRiCol))
 
-  /** `files` read with `explicitSchema` (a [[physicalReadSchema]]) —
-    * never a footer merge, which refuses widened columns.
+  /** `files` of snapshot `at`, scanned through a [[TxLogFileIndex]] (the
+    * log's file list, sizes and stats — no directory listing) with `at`'s
+    * [[physicalReadSchema]] — never a footer merge, which refuses widened
+    * columns.
     */
   private def scanFiles(spark: SparkSession, path: String, files: Seq[String],
-      explicitSchema: StructType): DataFrame =
-    spark.read.schema(explicitSchema).parquet(files.map(f => s"$path/$f"): _*)
+      at: Snapshot): DataFrame =
+    spark.baseRelationToDataFrame(TxLogFileIndex.relation(spark, path,
+      at.version, files, at.stats, physicalReadSchema(at)))
 
-  /** Load `files` with (file_name, row_index) metadata columns attached —
-    * the read-side anchor deletion vectors key on (parquet hidden
-    * `_metadata`, per-file physical row position, stable under pushed
-    * filters).
+  /** Load `files` of snapshot `at` with (file_name, row_index) metadata
+    * columns attached — the read-side anchor deletion vectors key on
+    * (parquet hidden `_metadata`, per-file physical row position, stable
+    * under pushed filters) — served under `mapping`'s column names.
     */
   private def readFilesMeta(spark: SparkSession, path: String,
-      files: Seq[String],
-      columnMap: Map[String, String], tombstones: Set[String],
-      explicitSchema: StructType): DataFrame =
+      files: Seq[String], at: Snapshot, mapping: Snapshot): DataFrame =
     logicalizeRead(
-      scanFiles(spark, path, files, explicitSchema)
+      scanFiles(spark, path, files, at)
         .withColumn(MetaFileCol, col("_metadata.file_name"))
         .withColumn(MetaRiCol, col("_metadata.row_index")),
-      columnMap, tombstones)
+      mapping.columnMap, mapping.physTombstones)
 
   /** Active-DV row-count ceiling for the broadcast-anti-join read path.
     * At or below it, DVs apply as a broadcast LeftAnti on (file_name,
@@ -1237,18 +1236,15 @@ object TxLog {
     * scale) — either way the table is never shuffled.
     */
   private def readFilesWithDvs(spark: SparkSession, path: String,
-      files: Seq[String], dvs: Map[String, String],
-      columnMap: Map[String, String], tombstones: Set[String],
-      explicitSchema: StructType): DataFrame = {
+      files: Seq[String], snap: Snapshot): DataFrame = {
     val present = files.toSet
-    val active = dvs.filter { case (f, _) => present.contains(f) }
+    val active = snap.dvs.filter { case (f, _) => present.contains(f) }
     if (active.isEmpty)
-      logicalizeRead(scanFiles(spark, path, files, explicitSchema),
-        columnMap, tombstones)
+      logicalizeRead(scanFiles(spark, path, files, snap),
+        snap.columnMap, snap.physTombstones)
     else
       applyActiveDvs(spark, path,
-        readFilesMeta(spark, path, files, columnMap, tombstones,
-          explicitSchema), active)
+        readFilesMeta(spark, path, files, snap, snap), active)
         .drop(MetaFileCol, MetaRiCol)
   }
 
@@ -1303,9 +1299,7 @@ object TxLog {
     */
   private def feedLoader(spark: SparkSession, path: String,
       endSnap: Snapshot): (Seq[String], Snapshot) => DataFrame =
-    (files, at) => readFilesMeta(spark, path, files,
-      columnMap = endSnap.columnMap, tombstones = endSnap.physTombstones,
-      explicitSchema = physicalReadSchema(at))
+    (files, at) => readFilesMeta(spark, path, files, at, endSnap)
 
   /** One version's row-level change emission, given the snapshot BEFORE
     * it — the shared core of [[changes]], the keyed CDF consumer, and the
@@ -1384,12 +1378,14 @@ object TxLog {
     (removedPart ++ dvDeletes ++ addedPart ++ dvInserts, after)
   }
 
-  /** Version `v`'s raw file actions `(added, removed)` — the seam the
-    * streaming-source replay consumes (commit-ordered appends).
+  /** Version `v`'s raw file actions `(added, removed, added files' stats)`
+    * — the seam the streaming-source replay consumes (commit-ordered
+    * appends).
     */
-  private[graft] def fileActions(path: String, v: Long): (Seq[String], Seq[String]) = {
+  private[graft] def fileActions(path: String, v: Long)
+      : (Seq[String], Seq[String], Map[String, FileStats]) = {
     val rec = parseRecord(path, v)
-    (rec.add, rec.remove)
+    (rec.add, rec.remove, rec.stats)
   }
 
   /** True when version `v` changes any deletion-vector entry — the
@@ -2648,9 +2644,7 @@ object TxLog {
     if (small.size < 2) return base
     // DV-aware materialization: a vectored small file compacts to its
     // LIVE rows and sheds its vector (compaction doubles as local purge)
-    val rows0 = readFilesWithDvs(spark, path, small, base.dvs,
-      columnMap = base.columnMap, tombstones = base.physTombstones,
-      explicitSchema = physicalReadSchema(base))
+    val rows0 = readFilesWithDvs(spark, path, small, base)
     val rows =
       if (sortCols.isEmpty) rows0.coalesce(targetFiles)
       else rows0.repartitionByRange(targetFiles, sortCols.map(col): _*)
@@ -2931,84 +2925,32 @@ object TxLog {
     addB + remB
   }
 
-  /** The names of `candidates` containing at least one row surviving
-    * `probe` — ONE distributed job over all candidate files at once
-    * (`input_file_name()` distinct), never a per-file driver loop: at
+  /** The names of `base`'s files containing at least one row surviving
+    * `probe` — ONE distributed job over all files at once
+    * (`_metadata.file_name` distinct), never a per-file driver loop: at
     * 10⁵–10⁶ files sequential job-launch latency alone would make every
-    * DELETE/MERGE commit minutes-to-hours regardless of data volume.
+    * DELETE/MERGE commit minutes-to-hours regardless of data volume. The
+    * file index prunes the probe's scan with the log's stats.
     */
   private def touchedFileNames(spark: SparkSession, path: String,
-      candidates: Seq[String], probe: DataFrame => DataFrame,
-      base: Snapshot): Set[String] =
-    if (candidates.isEmpty) Set.empty
+      probe: DataFrame => DataFrame, base: Snapshot): Set[String] =
+    if (base.files.isEmpty) Set.empty
     else {
       // DV-aware: rows a deletion vector already killed must not mark a
       // file touched (and must not re-enter the survivor rewrite). The
       // file tag is the scan-bound `_metadata.file_name` column, NOT
       // input_file_name() — the thread-local function refuses plans with
       // two file sources, which the DV anti-join introduces.
-      val present = candidates.toSet
-      val active = base.dvs.filter { case (f, _) => present.contains(f) }
-      val live = applyActiveDvs(spark, path,
-        readFilesMeta(spark, path, candidates, columnMap = base.columnMap,
-          tombstones = base.physTombstones,
-          explicitSchema = physicalReadSchema(base)), active)
-      probe(live).select(col(MetaFileCol)).distinct()
-        .collect().map(_.getString(0)).toSet
+      probe(liveRowsMeta(spark, path, base)).select(col(MetaFileCol))
+        .distinct().collect().map(_.getString(0)).toSet
     }
-
-  /** Drop candidates a `_graft_stats` index PROVES disjoint from
-    * [lo, hi] on `c` (the [[StatsIndex]] pre-pruning the lakehouse
-    * planners do before touching data). Sound by construction: only files
-    * PRESENT in the stats index with non-null bounds strictly outside the
-    * interval are dropped; anything the index does not cover stays a
-    * candidate (the index may predate newer files).
-    */
-  private def statsPruneCandidates(spark: SparkSession, path: String,
-      candidates: Seq[String], c: String, lo: Long, hi: Long): Seq[String] = {
-    val statsDir =
-      new java.io.File(path, graft.plans.RewriteSkipIndexScan.StatsDirName)
-    if (!statsDir.isDirectory) candidates
-    else {
-      val stats = spark.read.parquet(statsDir.toString)
-      if (!stats.columns.contains(s"${c}_min") ||
-          !stats.columns.contains(s"${c}_max")) candidates
-      else {
-        val disjoint = stats
-          .filter(col(s"${c}_min").isNotNull && col(s"${c}_max").isNotNull &&
-            (col(s"${c}_max") < lit(lo) || col(s"${c}_min") > lit(hi)))
-          .select(col("file")).collect().map(r => fileName(r.getString(0))).toSet
-        candidates.filterNot(disjoint.contains)
-      }
-    }
-  }
-
-  /** Drop `snap`'s files whose LOG-NATIVE stats prove them disjoint from
-    * [lo, hi] on `c` — metadata-only (the stats ride in the snapshot; no
-    * job, no sidecar read). Restricted to `typ == "l"` (integral) stats
-    * here because the caller's bounds are RAW values, which equal the
-    * canonical encoding only for integrals; [[statsPrunedFilesCanonical]]
-    * takes canonical-unit bounds and prunes every LONG-DOMAIN stats type
-    * (integral, DATE, TIMESTAMP_NTZ — string bounds live in
-    * strMin/strMax and are consumed only by `RewriteTxLogStatsScan`).
-    * Sound by construction: files without stats (or with all-NULL
-    * bounds) stay.
-    */
-  private def logStatsPrune(snap: Snapshot, c: String, lo: Long,
-      hi: Long): Seq[String] = {
-    val pc = snap.columnMap.getOrElse(c, c) // stats are physical-keyed
-    snap.files.filterNot { f =>
-      snap.stats.get(f).flatMap(_.cols.get(pc)).exists(cs =>
-        cs.typ == "l" && (cs.max.exists(_ < lo) || cs.min.exists(_ > hi)))
-    }
-  }
 
   /** The snapshot's files that CAN contain a row with canonical(`c`) ∈
     * [lo, hi] — log-native data skipping (Delta stats-pruning shape):
-    * pure metadata, zero jobs, and — unlike the `_graft_stats` sidecar —
-    * transactionally consistent with the version being read (stats ride
-    * in the same commit as their add actions, so they are correct at any
-    * time-travel version, never stale after a delete/replace/compact).
+    * pure metadata, zero jobs, and transactionally consistent with the
+    * version being read (stats ride in the same commit as their add
+    * actions, so they are correct at any time-travel version, never
+    * stale after a delete/replace/compact).
     * Bounds are CANONICAL units ([[ColStats]]: integral as-is, DATE epoch
     * days, TIMESTAMP_NTZ epoch micros). Returns (kept, total) so callers
     * can observe pruning effectiveness.
@@ -3038,9 +2980,7 @@ object TxLog {
     if (kept.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
     else alignToRecordedSchema(
-      readFilesWithDvs(spark, path, kept, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones,
-        explicitSchema = physicalReadSchema(snap)), snap)
+      readFilesWithDvs(spark, path, kept, snap), snap)
   }
 
   /** [lo, hi] of integral column `c` over the (batch-scale) `keys` frame,
@@ -3062,31 +3002,22 @@ object TxLog {
     * transactional `MERGE INTO` needs (delete-then-append as two versions
     * would expose an intermediate state with the touched keys missing).
     * Only files containing touched keys are rewritten; discovery is one
-    * distributed semi-join probe over all candidates, pre-pruned by the
-    * table's stats index (first integral key column) when one exists.
+    * distributed semi-join probe over the snapshot's files. When the log
+    * carries stats, the probe also filters the first key column to the
+    * batch's integral [lo, hi] (one small agg job), which the file index
+    * turns into file pruning — sound, since a NULL or out-of-range key
+    * cannot equi-match.
     */
   def replaceWhereKeys(spark: SparkSession, path: String, keys: DataFrame,
       nk: Seq[String], newData: DataFrame, expectedVersion: Long,
       alerts: Option[graft.runner.Alerts.Sink] = None): Snapshot = {
     val base = snapshot(path, Some(expectedVersion))
     val k = keys.select(nk.map(col): _*)
-    val hasSidecar = new java.io.File(path,
-      graft.plans.RewriteSkipIndexScan.StatsDirName).isDirectory
-    val hasLogStats = base.stats.nonEmpty
-    // key-bounds job only when an index (log-native or sidecar) exists to
-    // consume them
-    val candidates =
-      if (!hasSidecar && !hasLogStats) base.files
-      else integralBounds(k, nk.head) match {
-        case Some((lo, hi)) =>
-          val logPruned = logStatsPrune(base, nk.head, lo, hi)
-          if (hasSidecar)
-            statsPruneCandidates(spark, path, logPruned, nk.head, lo, hi)
-          else logPruned
-        case None => base.files
-      }
-    val touched = touchedFileNames(spark, path, candidates,
-      _.join(k, nk, "left_semi"), base)
+    val keyRange =
+      if (base.stats.isEmpty) None else integralBounds(k, nk.head)
+    val touched = touchedFileNames(spark, path, t =>
+      keyRange.fold(t) { case (lo, hi) => t.filter(col(nk.head).between(lo, hi)) }
+        .join(k, nk, "left_semi"), base)
     val untouched = base.files.filterNot(touched.contains)
     val schema = mergeSchemas(base.schema, newData.schema)
     enforceConstraints(newData, schema, base.constraints)
@@ -3096,10 +3027,7 @@ object TxLog {
       if (touched.isEmpty) (Nil, Map.empty[String, FileStats])
       else {
         val survivors =
-          readFilesWithDvs(spark, path, touched.toSeq, base.dvs,
-            columnMap = base.columnMap,
-            tombstones = base.physTombstones,
-            explicitSchema = physicalReadSchema(base))
+          readFilesWithDvs(spark, path, touched.toSeq, base)
             .join(k, nk, "left_anti")
         if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
         else writeDataFiles(survivors, path, base.partitionCols, cmap)
@@ -3120,30 +3048,14 @@ object TxLog {
   /** Delete matching rows: only files CONTAINING matches are rewritten
     * (survivor rows re-written as new files); clean files carry over by
     * reference — the commit records remove = touched, add = rewritten
-    * (O(touched) metadata). Discovery is one distributed job.
-    *
-    * `statsHint = Some((col, lo, hi))` additionally pre-prunes candidates
-    * through the table's `_graft_stats` index. The hint MUST be a
-    * SUPERSET bound of `cond`'s matching rows: files the index proves
-    * disjoint from [lo, hi] are never probed, so matching rows OUTSIDE
-    * the hinted interval silently SURVIVE the delete — the row-level
-    * filter only runs over files that survive pruning. A wrong hint is a
-    * data-correctness bug (silent under-delete), not a performance knob;
-    * when in doubt pass None.
+    * (O(touched) metadata). Discovery is one distributed job, whose
+    * `cond` the file index prunes with the log's stats like any read.
     */
   def deleteWhere(spark: SparkSession, path: String,
       cond: Column, expectedVersion: Long,
-      statsHint: Option[(String, Long, Long)] = None,
       alerts: Option[graft.runner.Alerts.Sink] = None): Snapshot = {
     val base = snapshot(path, Some(expectedVersion))
-    val candidates = statsHint match {
-      case Some((c, lo, hi)) =>
-        statsPruneCandidates(spark, path, logStatsPrune(base, c, lo, hi),
-          c, lo, hi)
-      case None => base.files
-    }
-    val touched = touchedFileNames(spark, path, candidates, _.filter(cond),
-      base)
+    val touched = touchedFileNames(spark, path, _.filter(cond), base)
     val untouched = base.files.filterNot(touched.contains)
     val (rewritten, rewrittenStats) =
       if (touched.isEmpty) (Nil, Map.empty[String, FileStats])
@@ -3154,10 +3066,7 @@ object TxLog {
         // survived); coalesce makes survival explicit. DV-aware read:
         // soft-deleted rows must not resurrect into the rewrite.
         val survivors =
-          readFilesWithDvs(spark, path, touched.toSeq, base.dvs,
-            columnMap = base.columnMap,
-            tombstones = base.physTombstones,
-            explicitSchema = physicalReadSchema(base))
+          readFilesWithDvs(spark, path, touched.toSeq, base)
             .filter(!coalesce(cond, lit(false)))
         if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
         else writeDataFiles(survivors, path, base.partitionCols,
@@ -3192,12 +3101,10 @@ object TxLog {
     * reads. Trade-offs, matching Delta's: per-file stats become UPPER
     * bounds (pruning stays sound — deletes only shrink), the read adds a
     * broadcast anti-join until [[purgeDeletes]] or a rewriting commit
-    * materializes, and the log-stats optimizer rule MAY not fire on
-    * DV'd tables (the user filter sits above the DV anti-join unless
-    * pushdown restores the Filter-over-scan shape; when it does fire,
-    * pruning the data side of the anti-join is sound — it only drops
-    * rows the filter would drop). Predicate NULL semantics match SQL
-    * DELETE: NULL never deletes.
+    * materializes, and the file index prunes the data side of the
+    * anti-join only when pushdown carries the filter below it (sound —
+    * it only drops rows the filter would drop). Predicate NULL semantics
+    * match SQL DELETE: NULL never deletes.
     */
   def deleteWhereDV(spark: SparkSession, path: String,
       cond: Column, expectedVersion: Long,
@@ -3294,9 +3201,7 @@ object TxLog {
     val base = snapshot(path, Some(expectedVersion))
     val dvd = base.files.filter(base.dvs.contains).sorted
     if (dvd.isEmpty) return base
-    val survivors = readFilesWithDvs(spark, path, dvd, base.dvs,
-      columnMap = base.columnMap, tombstones = base.physTombstones,
-      explicitSchema = physicalReadSchema(base))
+    val survivors = readFilesWithDvs(spark, path, dvd, base)
     val (rewritten, rewrittenStats) =
       if (survivors.isEmpty) (Nil, Map.empty[String, FileStats])
       else writeDataFiles(survivors, path, base.partitionCols,
@@ -3367,9 +3272,7 @@ object TxLog {
     val present = base.files.toSet
     val active = base.dvs.filter { case (f, _) => present.contains(f) }
     applyActiveDvs(spark, path,
-      readFilesMeta(spark, path, base.files,
-        columnMap = base.columnMap, tombstones = base.physTombstones,
-        explicitSchema = physicalReadSchema(base)), active)
+      readFilesMeta(spark, path, base.files, base, base), active)
   }
 
   /** UPDATE by deletion vector — row-level mutation WITHOUT file rewrites
@@ -3826,9 +3729,7 @@ object TxLog {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         snap.schema)
     else alignToRecordedSchema(
-      readFilesWithDvs(spark, path, matching, snap.dvs,
-        columnMap = snap.columnMap, tombstones = snap.physTombstones,
-        explicitSchema = physicalReadSchema(snap)), snap)
+      readFilesWithDvs(spark, path, matching, snap), snap)
   }
 
   /** DELETE whole partitions METADATA-ONLY (the Delta fast path for a

@@ -31,6 +31,11 @@ object RangeJoin {
 
   private val B = "__rj_bucket"
 
+  /** Default cap on the buckets one interval may span (shared with
+    * `plans.RewriteRangeJoin`, whose cap it is).
+    */
+  val MaxBucketsPerInterval = 4096
+
   /** Floor-division bucket id, exact for any sign and the full long range.
     * `x - pmod(x, w)` is an exact multiple of w, so integral division of it
     * is exact — no double rounding at ±2^53. The subtraction, however,
@@ -91,7 +96,7 @@ object RangeJoin {
       hiCol: String,
       bucketWidth: Long,
       keys: Seq[String] = Nil,
-      maxBucketsPerInterval: Int = 4096
+      maxBucketsPerInterval: Int = MaxBucketsPerInterval
   ): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val collisions = points.columns.toSet
@@ -123,7 +128,7 @@ object RangeJoin {
       rHi: String,
       bucketWidth: Long,
       keys: Seq[String] = Nil,
-      maxBucketsPerInterval: Int = 4096
+      maxBucketsPerInterval: Int = MaxBucketsPerInterval
   ): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val collisions = left.columns.toSet

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -19,9 +19,9 @@ import graft.streaming.TxLogDvRelation
   *
   * After expansion the user's filter sits above an ordinary LeftAnti
   * join over a parquet relation, so the SAME fixpoint batch pushes it
-  * down to the scan (LeftAnti passes left-only predicates) and
-  * `RewriteTxLogStatsScan` can prune the DATA side — the rule
-  * composition the `q_o_txlog_stats_dv` gate pins. Unconditional (no
+  * down to the scan (LeftAnti passes left-only predicates) and the
+  * TxLog file index prunes the DATA side — the composition the
+  * `q_o_txlog_stats_dv` gate pins. Unconditional (no
   * arming conf): the placeholder itself proves the read is a TxLog DV
   * read; expanding is never wrong, only faster.
   *
@@ -33,13 +33,14 @@ import graft.streaming.TxLogDvRelation
   */
 object ExpandTxLogDvScan extends Rule[LogicalPlan] {
 
-  /** Splice `native`'s analyzed plan under `rel`'s output ids. Alignment
-    * is BY NAME, not position — the expanded plan's column order comes
-    * from parquet footer merging / union alignment and is not guaranteed
-    * to match the placeholder's declared schema order; a positional zip
+  /** Splice `native`'s analyzed plan under the relation's output ids
+    * `out` (a V1 `LogicalRelation`'s or a V2 relation's). Alignment is BY
+    * NAME, not position — the expanded plan's column order comes from
+    * parquet footer merging / union alignment and is not guaranteed to
+    * match the placeholder's declared schema order; a positional zip
     * would silently serve values under the wrong names.
     */
-  private def splice(rel: LogicalRelation,
+  private def splice(out: Seq[Attribute],
       native: org.apache.spark.sql.DataFrame): LogicalPlan = {
     // The native plan is ANALYZED but not hint-eliminated: its broadcast()
     // hints are still ResolvedHint nodes, and this rule runs AFTER the
@@ -55,7 +56,7 @@ object ExpandTxLogDvScan extends Rule[LogicalPlan] {
         org.apache.spark.sql.graftbridge.StreamingSourceBridge
           .analyzedPlan(native))
     val byName = expanded.output.map(a => a.name -> a).toMap
-    val aliases = rel.output.map { o =>
+    val aliases = out.map { o =>
       val n = byName.getOrElse(o.name, throw new IllegalStateException(
         s"ExpandTxLogDvScan: native plan lacks column '${o.name}' the " +
           s"relation declared (has: ${expanded.output.map(_.name).mkString(", ")})"))
@@ -86,10 +87,11 @@ object ExpandTxLogDvScan extends Rule[LogicalPlan] {
   private def expand(plan: LogicalPlan): LogicalPlan = plan.transform {
     case rel @ LogicalRelation(dv: TxLogDvRelation, _, _, _, _) =>
       val session = SparkSession.active
-      splice(rel, TxLog.read(session, dv.path, asOf = Some(dv.version)))
+      splice(rel.output, TxLog.read(session, dv.path, asOf = Some(dv.version)))
     case rel @ LogicalRelation(cdf: graft.streaming.TxLogCdfRelation, _, _, _, _) =>
       val session = SparkSession.active
-      splice(rel, TxLog.changes(session, cdf.path, cdf.fromExclusive, cdf.to))
+      splice(rel.output,
+        TxLog.changes(session, cdf.path, cdf.fromExclusive, cdf.to))
     // the DSv2 catalog's relations expand to the same native plan — the
     // V1Scan fallback inside GraftTable only serves extension-less
     // sessions (the splice discipline is identical: V2 relation output
@@ -98,29 +100,7 @@ object ExpandTxLogDvScan extends Rule[LogicalPlan] {
         if rel.table.isInstanceOf[graft.sqlfront.GraftTable] =>
       val t = rel.table.asInstanceOf[graft.sqlfront.GraftTable]
       val session = SparkSession.active
-      spliceV2(rel.output,
+      splice(rel.output,
         TxLog.read(session, t.dir, asOf = Some(t.servedVersion)))
-  }
-
-  /** The V2-relation splice twin: same by-name alias discipline, keyed
-    * on the relation's output attributes instead of a LogicalRelation.
-    */
-  private def spliceV2(out: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-      native: org.apache.spark.sql.DataFrame): LogicalPlan = {
-    val expanded = org.apache.spark.sql.catalyst.optimizer
-      .EliminateResolvedHint(
-        org.apache.spark.sql.graftbridge.StreamingSourceBridge
-          .analyzedPlan(native))
-    val byName = expanded.output.map(a => a.name -> a).toMap
-    val aliases = out.map { o =>
-      val n = byName.getOrElse(o.name, throw new IllegalStateException(
-        s"ExpandTxLogDvScan: native plan lacks column '${o.name}' the " +
-          s"V2 relation declared (has: ${expanded.output.map(_.name).mkString(", ")})"))
-      val child: org.apache.spark.sql.catalyst.expressions.Expression =
-        if (n.dataType == o.dataType) n
-        else org.apache.spark.sql.catalyst.expressions.Cast(n, o.dataType)
-      Alias(child, o.name)(exprId = o.exprId, qualifier = o.qualifier)
-    }
-    Project(aliases, expanded)
   }
 }

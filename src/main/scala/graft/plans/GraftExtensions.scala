@@ -129,8 +129,8 @@ object RewriteIntersectSize extends Rule[LogicalPlan] {
   * equality conjunct (those already hash-join fine); a conjunct pair
   * bounding one side's integral expression below AND above by integral
   * expressions from the other side. Intervals spanning ≥
-  * `spark.graft.rangeJoin.maxBucketsPerInterval` (default 4096) buckets
-  * raise a loud per-row error instead of silently re-quadratizing.
+  * [[graft.operators.RangeJoin.MaxBucketsPerInterval]] buckets raise a
+  * loud per-row error instead of silently re-quadratizing.
   *
   * The rewritten join carries a cross-side equality, so the rule cannot
   * re-fire on its own output (safe under the optimizer's fixed-point).
@@ -144,7 +144,7 @@ object RewriteRangeJoin extends Rule[LogicalPlan]
   import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
 
   private val WidthKey = "spark.graft.rangeJoin.bucketWidth"
-  private val MaxKey   = "spark.graft.rangeJoin.maxBucketsPerInterval"
+  private val MaxBuckets = graft.operators.RangeJoin.MaxBucketsPerInterval.toLong
 
   private def isIntegral(e: Expression): Boolean = e.dataType match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -176,29 +176,19 @@ object RewriteRangeJoin extends Rule[LogicalPlan]
       Some(slow))
   }
 
-  /** Parse a rule conf as a long, failing with the CONFIG NAME instead of a
-    * bare NumberFormatException (which would otherwise fail every query in
-    * the session with no hint of which knob is malformed).
-    */
-  private def longConf(key: String, raw: String): Long =
-    try raw.trim.toLong
-    catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"RewriteRangeJoin: config $key must be an integer, got '$raw'")
-    }
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val width = conf.getConfString(WidthKey, "").trim
     if (width.isEmpty) return plan
-    val w = longConf(WidthKey, width)
+    // a malformed width names the CONFIG instead of a bare
+    // NumberFormatException that would fail every query in the session
+    val w = try width.toLong catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"RewriteRangeJoin: config $WidthKey must be an integer, got '$width'")
+    }
     if (w <= 0) return plan // explicit non-positive width = rule off
-    val max = longConf(MaxKey, conf.getConfString(MaxKey, "4096"))
-    if (max <= 0) throw new IllegalArgumentException(
-      s"RewriteRangeJoin: config $MaxKey must be positive, got '$max'")
     plan.transform {
       case j @ Join(l, r, Inner, Some(cond), _) =>
-        rewrite(j, l, r, cond, w, max).getOrElse(j)
+        rewrite(j, l, r, cond, w).getOrElse(j)
     }
   }
 
@@ -207,8 +197,7 @@ object RewriteRangeJoin extends Rule[LogicalPlan]
       l: LogicalPlan,
       r: LogicalPlan,
       cond: Expression,
-      w: Long,
-      max: Long
+      w: Long
   ): Option[LogicalPlan] = {
     // Some(true) = references only the left side, Some(false) = only the
     // right; None = literals-only or mixed (not a join-shaping expression)
@@ -262,10 +251,10 @@ object RewriteRangeJoin extends Rule[LogicalPlan]
       val guarded = CaseWhen(Seq(
         (GreaterThan(asLong(lo), asLong(hi)),
           Literal.create(Array.empty[Long], seq.dataType)),
-        (GreaterThanOrEqual(Subtract(bhi, blo), Literal(max)),
+        (GreaterThanOrEqual(Subtract(bhi, blo), Literal(MaxBuckets)),
           Cast(new RaiseError(Literal(
-            s"RewriteRangeJoin: interval spans >= $max buckets of width $w - " +
-              s"raise $WidthKey or $MaxKey")), seq.dataType))),
+            s"RewriteRangeJoin: interval spans >= $MaxBuckets buckets of width $w - " +
+              s"raise $WidthKey")), seq.dataType))),
         seq)
       val bAttr = AttributeReference("__rj_bucket_iv", LongType, nullable = false)()
       val gen = Generate(Explode(guarded), Nil, outer = false, None, Seq(bAttr), ivPlan)
@@ -283,10 +272,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => RewriteIntersectSize)
     e.injectOptimizerRule(_ => RewriteRangeJoin)
     e.injectOptimizerRule(_ => RewriteSkipIndexScan)
-    e.injectOptimizerRule(_ => RewriteTxLogStatsScan)
-    // before the stats rule in spirit (same fixpoint batch): expands the
-    // graft-txlog DV placeholder into the native anti-join plan, whose
-    // data-side Filter-over-scan shape the stats rule then prunes
+    // expands the graft-txlog placeholders into the native read plan,
+    // whose data-side scan the TxLog file index then prunes
     e.injectOptimizerRule(_ => ExpandTxLogDvScan)
     // SQL row-level DML + ALTER TABLE over catalog TxLog tables: a
     // post-hoc resolution rule (DELETE/UPDATE/MERGE analyze cleanly over

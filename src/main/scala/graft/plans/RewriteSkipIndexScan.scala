@@ -66,7 +66,7 @@ object RewriteSkipIndexScan extends Rule[LogicalPlan] with PredicateHelper {
     * a skip unsound exactly on emoji-adjacent boundaries). Cross-domain
     * comparisons never prune.
     */
-  private[plans] sealed trait BV {
+  private[graft] sealed trait BV {
     def lt(o: BV): Boolean = (this, o) match {
       case (BvLong(x), BvLong(y)) => x < y
       case (BvStr(x), BvStr(y)) =>
@@ -75,8 +75,8 @@ object RewriteSkipIndexScan extends Rule[LogicalPlan] with PredicateHelper {
       case _ => false
     }
   }
-  private[plans] final case class BvLong(v: Long) extends BV
-  private[plans] final case class BvStr(v: String) extends BV
+  private[graft] final case class BvLong(v: Long) extends BV
+  private[graft] final case class BvStr(v: String) extends BV
 
   /** Per-file bounds for every indexed column; None = null/unsupported
     * stat (unconstrained — the file is always kept for that column).
@@ -132,7 +132,7 @@ object RewriteSkipIndexScan extends Rule[LogicalPlan] with PredicateHelper {
     * DATE (Catalyst days), STRING (UTF8 binary order) — the same stat
     * classes Delta/Iceberg prune on.
     */
-  private[plans] def extractBounds(conjuncts: Seq[Expression])
+  private[graft] def extractBounds(conjuncts: Seq[Expression])
       : Map[String, (Option[BV], Option[BV])] = {
     def supported(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType => true

@@ -1,14 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 
-import graft.gold.TxLog
+import graft.gold.{TxLog, TxLogFileIndex}
 
 /** BATCH read support for the `graft-txlog` format —
   * `spark.read.format("graft-txlog").option("path", dir).load()` and
@@ -19,14 +16,13 @@ import graft.gold.TxLog
   * Two relation shapes, chosen by the snapshot being served:
   *
   *  - **No active deletion vectors** (the common case): a native
-  *    [[HadoopFsRelation]] over exactly the snapshot's files with the
-  *    LOG-RECORDED schema as the authority — the ordinary distributed
-  *    parquet plan, so filter pushdown, column pruning, AND the injected
-  *    `RewriteTxLogStatsScan` rule (the file paths' parent is the table
-  *    dir, the shape the rule matches) all apply with zero special
-  *    casing. The explicit log schema also sidesteps footer MERGING's
-  *    refusal of int→long widened re-declares (parquet TYPE WIDENING
-  *    reads them fine — the round-12 gotcha).
+  *    parquet relation over a [[TxLogFileIndex]] of exactly the
+  *    snapshot's files with the LOG-RECORDED schema as the authority —
+  *    the ordinary distributed parquet plan, so filter pushdown, column
+  *    pruning, AND file skipping by the log's stats all apply with zero
+  *    special casing. The explicit log schema also sidesteps footer
+  *    MERGING's refusal of int→long widened re-declares (parquet TYPE
+  *    WIDENING reads them fine — the round-12 gotcha).
   *  - **Active deletion vectors**: a [[TxLogDvRelation]] placeholder that
   *    (a) ALWAYS works — its `TableScan` fallback delegates to
   *    `TxLog.read`'s DV anti-join plan through an RDD boundary, correct
@@ -147,13 +143,8 @@ object TxLogRelation {
       snap.columnMap.exists { case (l, p) => l != p }
     if (active.nonEmpty || catalogSchema.isDefined || mappingActive)
       TxLogDvRelation(path, version, served, timeTraveled)(spark)
-    else {
-      val index = new InMemoryFileIndex(spark,
-        snap.files.map(f => new Path(s"$path/$f")), Map.empty, Some(served))
-      HadoopFsRelation(index, partitionSchema = StructType(Nil),
-        dataSchema = served, bucketSpec = None,
-        fileFormat = new ParquetFileFormat, options = Map.empty)(spark)
-    }
+    else TxLogFileIndex.relation(spark, path, version, snap.files,
+      snap.stats, served)
   }
 
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, Da
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
-import graft.gold.TxLog
+import graft.gold.{TxLog, TxLogFileIndex}
 
 /** INCREMENTAL streaming source over a [[graft.gold.TxLog]] table — the
   * real Delta-source shape (round 11 proved the semantics with a
@@ -527,11 +527,20 @@ abstract class TxLogVersionedSource(
 
   /** The pinned schema under PHYSICAL column names — what batch files
     * are actually read with (explicit-schema read: columns a file lacks
-    * null-fill, tombstoned physicals are simply never requested).
+    * null-fill, tombstoned physicals are simply never requested), every
+    * field nullable as a file source serves it.
     */
   protected final lazy val physicalPinnedSchema: StructType =
-    StructType(pinnedSchema.fields.map(f =>
-      f.copy(name = pinnedColumnMap.getOrElse(f.name, f.name))))
+    TxLogRelation.asNullableSchema(StructType(pinnedSchema.fields.map(f =>
+      f.copy(name = pinnedColumnMap.getOrElse(f.name, f.name)))))
+
+  /** A streaming-flagged scan of `files` through a [[TxLogFileIndex]]
+    * (the log's sizes and `stats`) with [[physicalPinnedSchema]].
+    */
+  protected final def streamingScan(files: Seq[String], version: Long,
+      stats: Map[String, TxLog.FileStats]): DataFrame =
+    StreamingSourceBridge.streamingBatch(spark, TxLogFileIndex.relation(
+      spark, tablePath, version, files, stats, physicalPinnedSchema))
 
   private lazy val mappingIsIdentity: Boolean =
     pinnedColumnMap.forall { case (l, p) => l == p }
@@ -759,8 +768,10 @@ class TxLogSource(
 
   protected def batchFor(from: Long, to: Long): DataFrame = {
     checkSchemaPinned(to)
+    val stats = Map.newBuilder[String, TxLog.FileStats]
     val files = (from + 1 to to).flatMap { v =>
-      val (added, removed) = TxLog.fileActions(tablePath, v)
+      val (added, removed, addStats) = TxLog.fileActions(tablePath, v)
+      stats ++= addStats
       // under a partition filter, adds restrict to the matching
       // partitions and only deletes TOUCHING them count as deletes —
       // the filtered view is append-only on its own terms
@@ -792,8 +803,7 @@ class TxLogSource(
       servedAdds
     }
     if (files.isEmpty) StreamingSourceBridge.emptyStreamingBatch(spark, schema)
-    else logicalizeBatch(StreamingSourceBridge.streamingFileBatch(spark,
-      physicalPinnedSchema, files.map(f => s"$tablePath/$f")))
+    else logicalizeBatch(streamingScan(files, to, stats.result()))
   }
 }
 
@@ -920,14 +930,13 @@ class TxLogCdfSource(
     // (file_name, row_index) metadata columns attached; the DV
     // anti/semi-joins the core composes on top are stream-static joins
     // with metadata-scale static sides. dataSchema pinned at query start
-    // (not each version's recorded schema — `at` goes unused — because a
-    // stream serves one row shape): narrower pre-evolution files
-    // null-fill, every part has IDENTICAL shape, so the union below needs
-    // no name-based alignment.
+    // (not each version's recorded schema — `at` gives only the files'
+    // sizes and stats — because a stream serves one row shape): narrower
+    // pre-evolution files null-fill, every part has IDENTICAL shape, so
+    // the union below needs no name-based alignment.
     def loadMeta(files: Seq[String], at: TxLog.Snapshot): DataFrame =
       logicalizeBatch(
-        StreamingSourceBridge.streamingFileBatch(spark, physicalPinnedSchema,
-            files.map(f => s"$tablePath/$f"))
+        streamingScan(files, at.version, at.stats)
           .withColumn(TxLog.MetaFileCol, col("_metadata.file_name"))
           .withColumn(TxLog.MetaRiCol, col("_metadata.row_index")),
         extra = Seq(TxLog.MetaFileCol, TxLog.MetaRiCol))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
-import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
 /** The two DataFrame constructions a V1 streaming `Source.getBatch` needs,
@@ -19,24 +20,15 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamingSourceBridge {
 
-  /** A streaming-flagged batch over concrete data files, read in place by
-    * the normal file-source path (column pruning / filter pushdown intact).
-    * `checkFilesExist = false`: the caller resolved the file list from its
-    * own transaction log, which is the authority — a probe-time listing
-    * would only re-introduce the eventual-consistency race the log removes.
+  /** A streaming-flagged batch over a file relation (a TxLog stream
+    * batch's files, listed by the caller's own transaction log), read in
+    * place by the normal file-source path (column pruning / filter
+    * pushdown intact).
     */
-  def streamingFileBatch(
-      spark: org.apache.spark.sql.SparkSession,
-      schema: StructType,
-      paths: Seq[String],
-      format: String = "parquet"): DataFrame = {
-    val cs = spark.asInstanceOf[ClassicSession]
-    val ds = DataSource(cs, className = format, paths = paths,
-      userSpecifiedSchema = Some(schema))
-    Dataset.ofRows(cs,
-      LogicalRelation(ds.resolveRelation(checkFilesExist = false),
-        isStreaming = true))
-  }
+  def streamingBatch(spark: org.apache.spark.sql.SparkSession,
+      relation: BaseRelation): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[ClassicSession],
+      LogicalRelation(relation, isStreaming = true))
 
   /** The inverse bridge, for V1 streaming SINKS: the DataFrame handed to
     * `Sink.addBatch` carries a streaming-flagged plan (an

@@ -275,25 +275,31 @@ class TxLogRelationSpec extends SparkSpecBase {
       .sorted shouldBe (10L until 30L).toArray
   }
 
-  test("format reads auto-prune through the stats rule on an armed session") {
+  test("format reads auto-prune through the log's file stats") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val path = freshPath()
     TxLog.init((0 until 800).map(i => (i.toLong, s"r$i")).toDF("id", "payload")
       .repartitionByRange(8, col("id")), path)
     val total = TxLog.snapshot(path).files.size
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 4)
-    s.conf.set(graft.plans.RewriteTxLogStatsScan.PathKey, path)
-    // the native HadoopFsRelation the format builds is EXACTLY the shape
-    // the stats rule matches — no special casing needed
-    val pruned = s.read.format("graft-txlog").option("path", path).load()
+    // the native relation the format builds lists its files from the
+    // snapshot through the TxLog file index, which skips by stats
+    val pruned = spark.read.format("graft-txlog").option("path", path).load()
       .filter(col("id") >= 100L && col("id") <= 199L)
     pruned.select("id").as[Long].collect().sorted shouldBe (100L to 199L).toArray
     val counts = pruned.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f.relation.location.inputFiles.length
+      case f: FileSourceScanExec => f.selectedPartitions.totalNumberOfFiles
     }
     counts should not be empty
-    counts.foreach(_ should be < total)
+    counts.foreach(_ should be < total.toLong)
+    // explain names the index and the snapshot's files; the index itself
+    // prints the table, the version and the file count
+    val explained = pruned.queryExecution.explainString(
+      org.apache.spark.sql.execution.SimpleMode)
+    explained should include("Location: TxLogFileIndex")
+    explained should include(s"($total paths)")
+    pruned.queryExecution.executedPlan.collectFirst {
+      case f: FileSourceScanExec => f.relation.location.toString
+    } shouldBe Some(s"TxLogFileIndex[$path@v0, $total files]")
   }
 
   test("SQL INSERT INTO / INSERT OVERWRITE commit through the log (InsertableRelation seam)") {

@@ -210,9 +210,8 @@ class TxLogSpec extends SparkSpecBase {
     val st2 = TxLog.read(spark, path)
     st2.filter(col("payload") === "NEW2").count() shouldBe 10L
     st2.count() shouldBe 420L
-    // deleteWhere with an explicit hint interval prunes soundly too
-    TxLog.deleteWhere(spark, path, col("id") >= 1000L, 3L,
-      statsHint = Some(("id", 1000L, Long.MaxValue)))
+    // a plain deleteWhere stays exact with the stale sidecar present
+    TxLog.deleteWhere(spark, path, col("id") >= 1000L, 3L)
     TxLog.read(spark, path).count() shouldBe 400L
   }
 
@@ -1254,25 +1253,39 @@ class TxLogSpec extends SparkSpecBase {
     }
   }
 
-  test("deleteWhere statsHint prunes through LOG stats with no sidecar index") {
+  test("deleteWhere probes only the files the log stats allow") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
     val path = freshPath()
     TxLog.init(rows(0 until 400).repartitionByRange(8, col("id")), path)
-    new java.io.File(path,
-      graft.plans.RewriteSkipIndexScan.StatsDirName).isDirectory shouldBe false
-    // a correct hint: full behavioral equivalence with an unhinted delete
-    TxLog.deleteWhere(spark, path, col("id").between(96L, 103L), 0L,
-      statsHint = Some(("id", 96L, 103L)))
+    TxLog.snapshot(path).files should have size 8
+    // files read by every parquet scan of the delete's queries, the
+    // probe first; AQE off (child session) keeps the scans visible
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        qe.executedPlan.foreach {
+          case scan: FileSourceScanExec if scan.output.exists(_.name == "id") =>
+            scanned.add(scan.selectedPartitions.totalNumberOfFiles)
+          case _ =>
+        }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      TxLog.deleteWhere(s, path, col("id").between(96L, 103L), 0L)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (scanned.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally s.listenerManager.unregister(listener)
     TxLog.read(spark, path).count() shouldBe 392L
-    // the documented wrong-hint hazard is now OBSERVABLE without a
-    // sidecar: a hint excluding part of the predicate range makes files
-    // the log stats prove disjoint from the hint survive un-probed —
-    // proof the pruning actually dropped candidate files
-    TxLog.deleteWhere(spark, path, col("id").between(150L, 249L), 1L,
-      statsHint = Some(("id", 150L, 199L)))
-    val left = TxLog.read(spark, path).filter(col("id").between(150L, 249L))
-      .count()
-    left should be > 0L   // under-delete: hinted-out files never probed
-    left should be < 100L // but the hinted range itself was deleted
+    scanned should not be empty
+    scanned.forEach(n => n should be < 8L)
   }
 
   test("history: every commit kind attributed with params, newest first, zero jobs") {

@@ -5,37 +5,37 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.gold.TxLog
-import graft.plans.RewriteTxLogStatsScan
 
-/** The log-native auto-skipping rule's contract: (1) an ordinary
+/** The TxLog file index's skipping contract: (1) an ordinary
   * `TxLog.read(...).filter(...)` scan reads strictly fewer files with
-  * ZERO extra jobs; (2) pruning is SOUND across predicate shapes in BOTH
-  * stat domains — canonical longs and truncated string bounds (UTF8
-  * binary order, incl. the supplementary-plane boundary where UTF-16
-  * order would mis-prune); (3) the stats are TRANSACTIONALLY CONSISTENT
-  * — a delete/rewrite immediately yields the new version's pruning
-  * (version keyed cache, no staleness window), and a time-travel scan of
-  * since-removed files keeps them (unknown files never pruned); (4) the
-  * conf is loud on misconfiguration and scoped per session.
+  * ZERO extra jobs, in any session with nothing set; (2) pruning is
+  * SOUND across predicate shapes in BOTH stat domains — canonical longs
+  * and truncated string bounds (UTF8 binary order, incl. the
+  * supplementary-plane boundary where UTF-16 order would mis-prune);
+  * (3) the stats are TRANSACTIONALLY CONSISTENT — a delete/rewrite
+  * immediately yields the new version's pruning, and a time-travel scan
+  * prunes with that version's own stats.
   */
 class TxLogStatsRuleSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** Files each parquet scan of `df`'s executed plan actually read. */
   private def scanFileCounts(df: DataFrame): Seq[Int] = {
     df.collect() // force final (AQE-resolved) plan
     df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f.relation.location.inputFiles.length
+      case f: FileSourceScanExec =>
+        f.selectedPartitions.totalNumberOfFiles.toInt
     }.toSeq
   }
 
+  /** `df`'s rows as a scan-free local frame: filters over it see every
+    * row, so it is the unpruned reference for a filtered read.
+    */
+  private def unpruned(df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   private def freshPath(): String =
     java.nio.file.Files.createTempDirectory("txstats").toString + "/t"
-
-  private def armed(): org.apache.spark.sql.SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 4)
-    s
-  }
 
   test("TxLog.read scans auto-prune through log stats and stay oracle-identical") {
     val path = freshPath()
@@ -49,8 +49,8 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       path)
     val total = TxLog.snapshot(path).files.size
     total shouldBe 8
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
+    scanFileCounts(TxLog.read(spark, path)).foreach(_ shouldBe total)
+    val all = unpruned(TxLog.read(spark, path))
 
     val predicates: Seq[(DataFrame => DataFrame, Boolean)] = Seq(
       ((d: DataFrame) => d.filter(col("k") >= 100L && col("k") <= 199L), true),
@@ -67,27 +67,26 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       ((d: DataFrame) => d.filter(col("payload") === "r5"), true)
     )
     for (((pred, expectPrune), i) <- predicates.zipWithIndex) {
-      val pruned = pred(TxLog.read(s, path))
-      val full = pred(TxLog.read(spark, path)) // unarmed parent session
+      val pruned = pred(TxLog.read(spark, path))
+      val full = pred(all)
       withClue(s"predicate #$i: ") {
         pruned.collect().map(_.toSeq).sortBy(_.mkString("|")) shouldBe
           full.collect().map(_.toSeq).sortBy(_.mkString("|"))
         val counts = scanFileCounts(pruned)
+        counts should not be empty
         if (expectPrune) counts.foreach(_ should be < total)
         else counts.foreach(_ shouldBe total)
-        scanFileCounts(full).foreach(_ shouldBe total)
       }
     }
     // TIMESTAMP_NTZ bound (Catalyst micros == log canonical micros)
-    val ntz = TxLog.read(s, path)
+    val ntz = TxLog.read(spark, path)
       .filter(col("ts") < lit("2020-01-15 00:00:00").cast("timestamp_ntz"))
     ntz.select(count(lit(1))).as[Long].head() shouldBe
-      TxLog.read(spark, path)
-        .filter(col("ts") < lit("2020-01-15 00:00:00").cast("timestamp_ntz"))
-        .select(count(lit(1))).as[Long].head()
+      all.filter(col("ts") < lit("2020-01-15 00:00:00").cast("timestamp_ntz"))
+        .count()
     scanFileCounts(ntz).foreach(_ should be < total)
     // an impossible interval prunes to zero files, result empty
-    val none = TxLog.read(s, path).filter(col("k") > 5000L)
+    val none = TxLog.read(spark, path).filter(col("k") > 5000L)
     none.collect() shouldBe empty
     scanFileCounts(none).foreach(_ shouldBe 0)
   }
@@ -113,10 +112,9 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       mx.codePointCount(0, mx.length) shouldBe 32
       mx.last shouldBe 'y' // the incremented trailing 'x' of the prefix
     }
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
-    val pruned = TxLog.read(s, path).filter(col("s") >= "b" && col("s") < "c")
-    val full = TxLog.read(spark, path).filter(col("s") >= "b" && col("s") < "c")
+    val pruned = TxLog.read(spark, path).filter(col("s") >= "b" && col("s") < "c")
+    val full = unpruned(TxLog.read(spark, path))
+      .filter(col("s") >= "b" && col("s") < "c")
     pruned.select("k").as[Long].collect().sorted shouldBe
       full.select("k").as[Long].collect().sorted
     scanFileCounts(pruned).foreach(_ should be < 4)
@@ -131,9 +129,7 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
         (3L, new String(Character.toChars(0x1F600))))
         .toDF("k", "s").repartitionByRange(2, col("s")),
       path2)
-    val s2 = armed()
-    s2.conf.set(RewriteTxLogStatsScan.PathKey, path2)
-    TxLog.read(s2, path2).filter(col("s") >= lit("\uFFFF"))
+    TxLog.read(spark, path2).filter(col("s") >= lit("\uFFFF"))
       .select("k").as[Long].collect().sorted shouldBe Array(2L, 3L)
   }
 
@@ -141,46 +137,53 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
     val path = freshPath()
     TxLog.init((0 until 800).map(i => (i.toLong, s"r$i")).toDF("k", "payload")
       .repartitionByRange(8, col("k")), path)
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
-    scanFileCounts(TxLog.read(s, path).filter(col("k") <= 99L))
+    scanFileCounts(TxLog.read(spark, path).filter(col("k") <= 99L))
       .foreach(_ should be < 8)
     // delete the low range: its file leaves; pruning must follow the new
     // version at once (stats ride in the commit — no staleness window)
-    TxLog.deleteWhere(s, path, col("k") <= 99L, 0L)
-    val after = TxLog.read(s, path).filter(col("k") <= 150L)
+    TxLog.deleteWhere(spark, path, col("k") <= 99L, 0L)
+    val after = TxLog.read(spark, path).filter(col("k") <= 150L)
     after.select(sum(col("k"))).as[Long].head() shouldBe (100L to 150L).sum
     scanFileCounts(after).foreach(_ shouldBe 1)
-    // time travel BELOW the delete: the removed file is unknown to the
-    // current stats map → kept, and the result is still exact
-    val tt = TxLog.read(s, path, asOf = Some(0L)).filter(col("k") <= 150L)
+    // time travel BELOW the delete reads the removed file, pruned with
+    // version 0's own stats: exact result, fewer than its 8 files
+    val tt = TxLog.read(spark, path, asOf = Some(0L)).filter(col("k") <= 150L)
     tt.select(sum(col("k"))).as[Long].head() shouldBe (0L to 150L).sum
+    scanFileCounts(tt).foreach(_ should be < 8)
   }
 
-  test("conf pointing at a non-table raises a named error; other scans and sessions unaffected") {
-    val path = freshPath()
-    TxLog.init((0 until 10).map(i => (i.toLong, s"r$i")).toDF("k", "payload"),
-      path)
-    val bad = path + "_nope" // plain parquet dir, NO commit log
-    (0 until 5).map(i => (i.toLong, "x")).toDF("k", "p")
-      .write.mode("overwrite").parquet(bad)
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, bad)
-    // a scan whose files live elsewhere never fires the rule: no error
-    TxLog.read(s, path).filter(col("k") === 1L).collect() should have size 1
-    // a FILE-LIST scan under the misconfigured dir fires it → loud error
-    val parts = new java.io.File(bad).listFiles()
-      .filter(_.getName.startsWith("part-")).map(_.getPath)
-    parts should not be empty
-    val e = intercept[Exception] {
-      s.read.parquet(parts.toIndexedSeq: _*).filter(col("k") === 1L).collect()
+  test("every TxLog read prunes with no conf: two tables and time travel") {
+    def table(n: Int): String = {
+      val p = freshPath()
+      TxLog.init((0 until n).map(i => (i.toLong, s"r$i")).toDF("k", "payload")
+        .repartitionByRange(8, col("k")), p)
+      p
     }
-    val chain = Iterator.iterate(e: Throwable)(_.getCause)
-      .takeWhile(_ != null).toSeq
-    chain.exists(c => c.getMessage != null &&
-      c.getMessage.contains(RewriteTxLogStatsScan.PathKey)) shouldBe true
-    // the unarmed parent session is untouched by the misconfiguration
-    TxLog.read(spark, path).count() shouldBe 10L
+    val (a, b) = (table(800), table(400))
+    // rewrite every file of b at v1 (each loses its multiples of 7), so
+    // version 0's files are all removed from the head snapshot
+    TxLog.deleteWhere(spark, b, col("k") % 7 === 0L, 0L)
+    TxLog.snapshot(b).files.toSet.intersect(
+      TxLog.snapshot(b, Some(0L)).files.toSet) shouldBe empty
+    val reads: Seq[(String, DataFrame, DataFrame, Int)] = Seq(
+      ("table a", TxLog.read(spark, a), unpruned(TxLog.read(spark, a)),
+        TxLog.snapshot(a).files.size),
+      ("table b", TxLog.read(spark, b), unpruned(TxLog.read(spark, b)),
+        TxLog.snapshot(b).files.size),
+      ("table b versionAsOf 0",
+        spark.read.format("graft-txlog").option("path", b)
+          .option("versionAsOf", "0").load(),
+        unpruned(TxLog.read(spark, b, asOf = Some(0L))),
+        TxLog.snapshot(b, Some(0L)).files.size))
+    for ((name, read, all, files) <- reads) withClue(s"$name: ") {
+      val filtered = read.filter(col("k").between(100L, 149L))
+      filtered.select("k").as[Long].collect().sorted shouldBe
+        all.filter(col("k").between(100L, 149L)).select("k").as[Long]
+          .collect().sorted
+      val counts = scanFileCounts(filtered)
+      counts should not be empty
+      counts.foreach(_ should be < files)
+    }
   }
 
   test("stats pruning COMPOSES with deletion vectors: pushdown restores the eligible shape below the anti-join") {
@@ -191,27 +194,25 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       path)
     TxLog.deleteWhereDV(spark, path, col("k") % 10 === 3, 0L)
     val total = TxLog.snapshot(path).files.size
-    val s = armed()
-    s.conf.set(RewriteTxLogStatsScan.PathKey, path)
     // AQE wraps the join sides in QueryStageExec LEAVES, hiding the scans
     // from plan.collect — turn it off so the file-count assertions can
-    // see them (the rule itself is AQE-independent: it runs at logical
-    // optimization, before any physical planning)
+    // see them (pruning itself is AQE-independent: the file index drops
+    // files when the scan lists them)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", 4)
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    val u = spark.newSession()
-    u.conf.set("spark.sql.shuffle.partitions", 4)
-    u.conf.set("spark.sql.adaptive.enabled", "false")
     val pruned = TxLog.read(s, path).filter(col("k") >= 100L && col("k") <= 199L)
-    val full = TxLog.read(u, path).filter(col("k") >= 100L && col("k") <= 199L)
     // soundness first: identical rows (DVs applied AND files pruned)
     pruned.select("k").as[Long].collect().sorted shouldBe
-      full.select("k").as[Long].collect().sorted
+      unpruned(TxLog.read(s, path)).filter(col("k") >= 100L && col("k") <= 199L)
+        .select("k").as[Long].collect().sorted
     pruned.select("k").as[Long].collect().sorted shouldBe
       (100L to 199L).filterNot(_ % 10 == 3).toArray
     // the plan keeps the DV anti-join AND the DATA-side scan reads fewer
     // files — the user filter was pushed below the LeftAnti join onto
-    // the parquet relation, where the rule fired (identify the data scan
-    // by its `k` column; the other scan is the metadata-scale DV sidecar)
+    // the parquet relation, whose file index pruned it (identify the
+    // data scan by its `k` column; the other scan is the metadata-scale
+    // DV sidecar)
     pruned.collect()
     val plan = pruned.queryExecution.executedPlan
     plan.toString should include("LeftAnti")
@@ -219,15 +220,16 @@ class TxLogStatsRuleSpec extends SparkSpecBase {
       case f: FileSourceScanExec
           if f.output.exists(_.name == "k") &&
             f.relation.location.rootPaths.exists(_.getName.startsWith("part-")) =>
-        f.relation.location.inputFiles.length
+        f.selectedPartitions.totalNumberOfFiles
     }
     dataScans should not be empty
-    dataScans.foreach(_ should be < total)
-    // unarmed session: same rows, full scan
+    dataScans.foreach(_ should be < total.toLong)
+    // the unfiltered read of the same session scans every file
+    val full = TxLog.read(s, path)
     full.collect()
     full.queryExecution.executedPlan.collect {
       case f: FileSourceScanExec if f.output.exists(_.name == "k") =>
-        f.relation.location.inputFiles.length
-    }.foreach(_ shouldBe total)
+        f.selectedPartitions.totalNumberOfFiles
+    }.foreach(_ shouldBe total.toLong)
   }
 }
