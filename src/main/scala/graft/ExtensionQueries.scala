@@ -144,24 +144,21 @@ object ExtensionQueries {
 
   /** AUTOMATIC data skipping END-TO-END: write lineitem range-clustered on
     * l_partkey into 8 files, persist the `_graft_stats` min/max index
-    * inside the table dir, then run a PLAIN `read.parquet(...).filter`
-    * with `spark.graft.skipIndex.path` armed on an isolated child session
-    * (the `qRangeJoinAuto` conf-scoping discipline) — the injected
-    * `plans.RewriteSkipIndexScan` rule prunes the scan to the ~2 files
-    * whose boxes intersect the predicate. The oracle full-scans the SAME
-    * written files in DuckDB, so an unsound skip (a pruned file that held
-    * matching rows) hash-mismatches; pruning-actually-happens is
-    * plan-asserted in SkipIndexRuleSpec.
+    * inside the table dir, then run a PLAIN `read.parquet(...).filter`:
+    * the sidecar's presence arms the injected `plans.RewriteSkipIndexScan`
+    * rule, which prunes the scan to the ~2 files whose boxes intersect the
+    * predicate (stale-safe: the directory listing decides which files
+    * exist). The oracle full-scans the SAME written files in DuckDB, so an
+    * unsound skip (a pruned file that held matching rows) hash-mismatches;
+    * pruning-actually-happens is plan-asserted in SkipIndexRuleSpec.
     */
-  private def qSkipIndexAuto(s0: SparkSession, dir: String): DataFrame = {
+  private def qSkipIndexAuto(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_roundtrip/skipindex_lineitem"
-    T(s0, dir).lineitem
+    T(s, dir).lineitem
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
       .repartitionByRange(8, col("l_partkey"))
       .write.mode("overwrite").parquet(path)
-    graft.gold.StatsIndex.write(s0, path, Seq("l_partkey"))
-    val s = s0.newSession()
-    s.conf.set(graft.plans.RewriteSkipIndexScan.PathKey, path)
+    graft.gold.StatsIndex.write(s, path, Seq("l_partkey"))
     s.read.parquet(path)
       .filter(col("l_partkey") >= 100L && col("l_partkey") <= 300L)
       .groupBy("l_partkey")
@@ -173,21 +170,20 @@ object ExtensionQueries {
     * integrals only — Delta/Iceberg prune on dates and strings first):
     * lineitem is rewritten range-clustered on a DATE ship_date, indexed on
     * (ship_date, l_returnflag), and a plain filter combining a date range
-    * with a string equality is pruned through the same injected rule.
-    * Oracle full-scans the written files; SkipIndexRuleSpec asserts the
-    * date path actually prunes and stays sound.
+    * with a string equality is pruned through the same injected rule,
+    * armed by the `_graft_stats` sidecar's presence alone. Oracle
+    * full-scans the written files; SkipIndexRuleSpec asserts the date
+    * path actually prunes and stays sound.
     */
-  private def qSkipIndexDates(s0: SparkSession, dir: String): DataFrame = {
+  private def qSkipIndexDates(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_roundtrip/skipindex_lineitem_dates"
-    T(s0, dir).lineitem
+    T(s, dir).lineitem
       .select(col("l_orderkey"), col("l_returnflag"),
         col("l_shipdate").cast("date").as("ship_date"),
         col("l_extendedprice"))
       .repartitionByRange(8, col("ship_date"))
       .write.mode("overwrite").parquet(path)
-    graft.gold.StatsIndex.write(s0, path, Seq("ship_date", "l_returnflag"))
-    val s = s0.newSession()
-    s.conf.set(graft.plans.RewriteSkipIndexScan.PathKey, path)
+    graft.gold.StatsIndex.write(s, path, Seq("ship_date", "l_returnflag"))
     s.read.parquet(path)
       .filter(col("ship_date") >= lit("1995-01-01").cast("date") &&
         col("ship_date") < lit("1996-01-01").cast("date") &&

@@ -213,7 +213,15 @@ object TxLog {
     */
   final case class ColStats(typ: String, nulls: Long,
       min: Option[Long], max: Option[Long],
-      strMin: Option[String] = None, strMax: Option[String] = None)
+      strMin: Option[String] = None, strMax: Option[String] = None) {
+
+    /** These stats as pruning bounds: strings their truncated
+      * `strMin`/`strMax`, every other type its canonical longs.
+      */
+    def bounds: StatsPruning.Bounds =
+      if (typ == "s") (strMin.map(StatsPruning.BvStr), strMax.map(StatsPruning.BvStr))
+      else (min.map(StatsPruning.BvLong), max.map(StatsPruning.BvLong))
+  }
 
   /** `bytes` is the add-file's physical size recorded AT COMMIT TIME
     * (Delta's add-action `size` field): byte-budget admission control
@@ -2956,27 +2964,31 @@ object TxLog {
     * can observe pruning effectiveness.
     */
   def statsPrunedFilesCanonical(path: String, c: String, lo: Long, hi: Long,
-      asOf: Option[Long] = None): (Seq[String], Int) = {
-    val snap = snapshot(path, asOf)
+      asOf: Option[Long] = None): (Seq[String], Int) =
+    statsPrunedFiles(snapshot(path, asOf), c, lo, hi)
+
+  private def statsPrunedFiles(snap: Snapshot, c: String, lo: Long,
+      hi: Long): (Seq[String], Int) = {
     // per-file stats are keyed by the PHYSICAL column name (what the
     // files store); callers speak logical
     val pc = snap.columnMap.getOrElse(c, c)
+    val (l, h) = (Some(StatsPruning.BvLong(lo)), Some(StatsPruning.BvLong(hi)))
     val kept = snap.files.filterNot { f =>
-      snap.stats.get(f).flatMap(_.cols.get(pc)).exists(cs =>
-        cs.max.exists(_ < lo) || cs.min.exists(_ > hi))
+      snap.stats.get(f).flatMap(_.cols.get(pc))
+        .exists(cs => StatsPruning.disjoint(cs.bounds, l, h))
     }
     (kept, snap.files.size)
   }
 
   /** Read only the files that can contain canonical(`c`) ∈ [lo, hi] — the
     * caller still applies the row-level predicate (stats prune I/O, never
-    * semantics; `StatsIndex.prunedRead` has the same contract). An
-    * all-pruned selection serves a schema-correct empty frame.
+    * semantics). An all-pruned selection serves a schema-correct empty
+    * frame.
     */
   def readPruned(spark: SparkSession, path: String, c: String, lo: Long,
       hi: Long, asOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(path, asOf)
-    val (kept, _) = statsPrunedFilesCanonical(path, c, lo, hi, asOf)
+    val (kept, _) = statsPrunedFiles(snap, c, lo, hi)
     if (kept.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
     else alignToRecordedSchema(

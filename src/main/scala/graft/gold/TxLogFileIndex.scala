@@ -3,14 +3,12 @@ package graft.gold
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, HadoopFsRelation, PartitionDirectory
 }
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
-
-import graft.plans.RewriteSkipIndexScan.{BV, BvLong, BvStr, extractBounds}
 
 /** The ONE place a TxLog file list becomes a scan: a Spark [[FileIndex]]
   * over files the log recorded (a snapshot's, or a stream batch's), so
@@ -26,21 +24,18 @@ import graft.plans.RewriteSkipIndexScan.{BV, BvLong, BvStr, extractBounds}
   *    size pays one stat) — exact because the parquet reader locates the
   *    footer by it. `_metadata.file_name` is therefore the log's file
   *    name, which deletion-vector lookups key on.
-  *  - `listFiles` drops a file only when its recorded bounds PROVE some
-  *    pushed `dataFilters` conjunct false (`col <op> literal`, both stat
-  *    domains: canonical longs and the truncated one-sided string bounds,
-  *    compared in UTF8 binary order — see [[TxLog.ColStats]]). Stats are
-  *    keyed by PHYSICAL column name, which is what the relation's schema
-  *    and hence the filters carry. Files without stats for a constrained
-  *    column are kept; the row-level filter always re-applies above the
-  *    scan, so pruning drops I/O, never rows.
+  *  - `listFiles` prunes through [[StatsPruning.prune]] with the
+  *    recorded bounds (both stat domains: canonical longs and the
+  *    truncated one-sided string bounds — see [[TxLog.ColStats]]). Stats
+  *    are keyed by PHYSICAL column name, which is what the relation's
+  *    schema and hence the filters carry.
   *  - `sizeInBytes` is the recorded sum of ALL files (broadcast choices
   *    do not move with pruning) and `inputFiles` is every file: what a
   *    scan actually read is the scan node's "number of files read".
   */
 final class TxLogFileIndex(spark: SparkSession, path: String, version: Long,
     files: Seq[String], stats: Map[String, TxLog.FileStats])
-    extends FileIndex with PredicateHelper {
+    extends FileIndex {
 
   private lazy val statuses: Seq[FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -56,16 +51,9 @@ final class TxLogFileIndex(spark: SparkSession, path: String, version: Long,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val bounds = extractBounds(dataFilters.flatMap(splitConjunctivePredicates))
-    val kept =
-      if (bounds.isEmpty) statuses
-      else statuses.filterNot { st =>
-        stats.get(st.getPath.getName).exists { fs =>
-          bounds.exists { case (c, (lo, hi)) =>
-            fs.cols.get(c).exists(cs => TxLogFileIndex.disjoint(cs, lo, hi))
-          }
-        }
-      }
+    val kept = StatsPruning.prune(statuses, dataFilters) { (st, c) =>
+      stats.get(st.getPath.getName).flatMap(_.cols.get(c)).map(_.bounds)
+    }
     Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
 
@@ -83,19 +71,6 @@ final class TxLogFileIndex(spark: SparkSession, path: String, version: Long,
 }
 
 object TxLogFileIndex {
-
-  /** True when a file's recorded bounds `cs` prove no value lies in
-    * [`lo`, `hi`] (either side open): strings compare their truncated
-    * `strMin`/`strMax`, every other stats type its canonical longs.
-    */
-  private def disjoint(cs: TxLog.ColStats, lo: Option[BV],
-      hi: Option[BV]): Boolean = {
-    val (mn, mx): (Option[BV], Option[BV]) =
-      if (cs.typ == "s") (cs.strMin.map(BvStr), cs.strMax.map(BvStr))
-      else (cs.min.map(BvLong), cs.max.map(BvLong))
-    lo.zip(mx).exists { case (l, m) => m.lt(l) } ||
-      hi.zip(mn).exists { case (h, m) => h.lt(m) }
-  }
 
   /** A parquet relation over `files` of the table at `path`, read with
     * `dataSchema` (physical column names, every field nullable).

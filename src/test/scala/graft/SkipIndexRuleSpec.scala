@@ -4,24 +4,29 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.plans.RewriteSkipIndexScan
-
 /** The automatic data-skipping rule's contract: (1) pruning actually
-  * happens — the executed scan reads strictly fewer files; (2) pruning is
-  * SOUND — pruned result ≡ unpruned result for every predicate shape the
-  * rule understands and for ones it must ignore; (3) the conf is loud on
-  * misconfiguration and scoped per session; (4) a rebuilt index
-  * invalidates the driver-side stats cache.
+  * happens — the executed scan reads strictly fewer files — whenever the
+  * table root holds a `_graft_stats` sidecar, and never without one;
+  * (2) pruning is SOUND — pruned result ≡ unpruned result for every
+  * predicate shape the rule understands and for ones it must ignore;
+  * (3) a STALE sidecar costs skipping, never rows: a file appended after
+  * the build is read, a listed file since deleted is not; (4) a rebuilt
+  * index invalidates the driver-side stats cache.
   */
 class SkipIndexRuleSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** Files each parquet scan of `df`'s executed plan actually read. */
   private def scanFileCounts(df: DataFrame): Seq[Int] = {
     df.collect() // force final (AQE-resolved) plan
     df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f.relation.location.inputFiles.length
+      case f: FileSourceScanExec =>
+        f.selectedPartitions.totalNumberOfFiles.toInt
     }.toSeq
   }
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   private def writeTable(path: String): Unit = {
     // k runs 0..799 range-clustered into 8 files of ~tight [k] ranges
@@ -32,11 +37,24 @@ class SkipIndexRuleSpec extends SparkSpecBase {
     gold.StatsIndex.write(spark, path, Seq("k"))
   }
 
+  /** A copy of the table at `path` without its `_graft_stats` sidecar:
+    * the unpruned reference for the same files.
+    */
+  private def plainCopy(path: String): String = {
+    val src = java.nio.file.Paths.get(path)
+    val dst = java.nio.file.Files.createTempDirectory("skipidx-plain").resolve("t")
+    java.nio.file.Files.createDirectories(dst)
+    src.toFile.listFiles().filter(_.isFile).foreach(f =>
+      java.nio.file.Files.copy(f.toPath, dst.resolve(f.getName)))
+    dst.toString
+  }
+
   test("rule prunes the scan and stays oracle-identical across predicate shapes") {
     val path = java.nio.file.Files.createTempDirectory("skipidx").toString + "/t"
     writeTable(path)
-    val s = spark.newSession()
-    s.conf.set(RewriteSkipIndexScan.PathKey, path)
+    val plain = plainCopy(path)
+    // one base frame for every predicate: each query prunes on its own
+    val indexed = spark.read.parquet(path)
 
     val predicates: Seq[(DataFrame => DataFrame, Boolean)] = Seq(
       // (predicate, expectPrune)
@@ -48,20 +66,19 @@ class SkipIndexRuleSpec extends SparkSpecBase {
       ((d: DataFrame) => d.filter(col("grp") === 3), false) // un-indexed only: no prune
     )
     for (((pred, expectPrune), i) <- predicates.zipWithIndex) {
-      val pruned = pred(s.read.parquet(path))
-      val full = pred(spark.read.parquet(path)) // parent session: rule unarmed
+      val pruned = pred(indexed)
+      val full = pred(spark.read.parquet(plain))
       withClue(s"predicate #$i: ") {
-        pruned.collect().map(_.toSeq).sortBy(_.mkString("|")) shouldBe
-          full.collect().map(_.toSeq).sortBy(_.mkString("|"))
+        rowsOf(pruned) shouldBe rowsOf(full)
         val counts = scanFileCounts(pruned)
         if (expectPrune) counts.foreach(_ should be < 8)
         else counts.foreach(_ shouldBe 8)
-        // the unarmed parent session never prunes (conf scoping)
+        // the same table copied without _graft_stats never prunes
         scanFileCounts(full).foreach(_ shouldBe 8)
       }
     }
     // an impossible interval prunes to zero files, result empty
-    val none = s.read.parquet(path).filter(col("k") > 5000L)
+    val none = indexed.filter(col("k") > 5000L)
     none.collect() shouldBe empty
     scanFileCounts(none).foreach(_ shouldBe 0)
   }
@@ -82,8 +99,7 @@ class SkipIndexRuleSpec extends SparkSpecBase {
       .repartitionByRange(8, col("d"))
       .write.mode("overwrite").parquet(path)
     gold.StatsIndex.write(spark, path, Seq("d", "s", "ts"))
-    val s = spark.newSession()
-    s.conf.set(RewriteSkipIndexScan.PathKey, path)
+    val plain = plainCopy(path)
     val predicates: Seq[DataFrame => DataFrame] = Seq(
       d => d.filter(col("d") >= lit("2020-02-01").cast("date") &&
         col("d") < lit("2020-03-01").cast("date")),
@@ -92,47 +108,56 @@ class SkipIndexRuleSpec extends SparkSpecBase {
       d => d.filter(col("ts") < lit("2020-01-15 00:00:00").cast("timestamp_ntz"))
     )
     for ((pred, i) <- predicates.zipWithIndex) {
-      val pruned = pred(s.read.parquet(path))
-      val full = pred(spark.read.parquet(path))
+      val pruned = pred(spark.read.parquet(path))
+      val full = pred(spark.read.parquet(plain))
       withClue(s"predicate #$i: ") {
-        pruned.collect().map(_.toSeq).sortBy(_.mkString("|")) shouldBe
-          full.collect().map(_.toSeq).sortBy(_.mkString("|"))
+        rowsOf(pruned) shouldBe rowsOf(full)
         scanFileCounts(pruned).foreach(_ should be < 8)
         scanFileCounts(full).foreach(_ shouldBe 8)
       }
     }
   }
 
+  test("a file appended after the sidecar build is read") {
+    val path = java.nio.file.Files.createTempDirectory("skipidx-add")
+      .toString + "/t"
+    writeTable(path)
+    (100 until 110).map(i => (i.toLong, i % 7, s"late$i"))
+      .toDF("k", "grp", "payload").coalesce(1)
+      .write.mode("append").parquet(path)
+    val q = spark.read.parquet(path).filter(col("k").between(100L, 199L))
+    q.count() shouldBe 110L
+    rowsOf(q) shouldBe rowsOf(
+      spark.read.parquet(plainCopy(path)).filter(col("k").between(100L, 199L)))
+    scanFileCounts(q).foreach(_ should be < 9) // the other files still prune
+  }
+
+  test("a listed file deleted after the sidecar build is not read") {
+    val path = java.nio.file.Files.createTempDirectory("skipidx-del")
+      .toString + "/t"
+    writeTable(path)
+    val victim = spark.read.parquet(path).filter(col("k") === 150L)
+      .select(input_file_name()).as[String].head()
+    new java.io.File(new java.net.URI(victim)).delete() shouldBe true
+    val q = spark.read.parquet(path).filter(col("k").between(100L, 399L))
+    rowsOf(q) shouldBe rowsOf(
+      spark.read.parquet(plainCopy(path)).filter(col("k").between(100L, 399L)))
+    scanFileCounts(q).foreach(_ should be < 7)
+  }
+
   test("a rebuilt index invalidates the stats cache") {
     val path = java.nio.file.Files.createTempDirectory("skipidx2").toString + "/t"
     writeTable(path)
-    val s = spark.newSession()
-    s.conf.set(RewriteSkipIndexScan.PathKey, path)
     scanFileCounts(
-      s.read.parquet(path).filter(col("k") <= 99L)).foreach(_ should be < 8)
+      spark.read.parquet(path).filter(col("k") <= 99L)).foreach(_ should be < 8)
     // rewrite: same key space but 2 files — stale stats would prune wrong
     (0 until 800).map(i => (i.toLong, i % 7, s"r$i"))
       .toDF("k", "grp", "payload")
       .repartitionByRange(2, col("k"))
       .write.mode("overwrite").parquet(path)
     gold.StatsIndex.write(spark, path, Seq("k"))
-    val after = s.read.parquet(path).filter(col("k") <= 99L)
+    val after = spark.read.parquet(path).filter(col("k") <= 99L)
     after.select(sum(col("k"))).as[Long].collect().head shouldBe (0L to 99L).sum
     scanFileCounts(after).foreach(_ shouldBe 1)
-  }
-
-  test("conf set without an index raises a named error") {
-    val path = java.nio.file.Files.createTempDirectory("skipidx3").toString + "/t"
-    (0 until 10).map(i => (i.toLong, s"r$i")).toDF("k", "payload")
-      .write.mode("overwrite").parquet(path)
-    val s = spark.newSession()
-    s.conf.set(RewriteSkipIndexScan.PathKey, path)
-    val e = intercept[Exception] {
-      s.read.parquet(path).filter(col("k") === 1L).collect()
-    }
-    val chain = Iterator.iterate(e: Throwable)(_.getCause)
-      .takeWhile(_ != null).toSeq
-    chain.exists(c => c.getMessage != null &&
-      c.getMessage.contains(RewriteSkipIndexScan.PathKey)) shouldBe true
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.gold.TxLog
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** The commit log's ACID contract: atomic visibility (readers see only
@@ -210,6 +211,13 @@ class TxLogSpec extends SparkSpecBase {
     val st2 = TxLog.read(spark, path)
     st2.filter(col("payload") === "NEW2").count() shouldBe 10L
     st2.count() shouldBe 420L
+    // the sidecar never replaces the log's own file index
+    val filtered = st2.filter(col("id") < 20L).queryExecution.optimizedPlan
+    val locations = filtered.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }
+    locations should not be empty
+    all(locations) shouldBe a[graft.gold.TxLogFileIndex]
     // a plain deleteWhere stays exact with the stale sidecar present
     TxLog.deleteWhere(spark, path, col("id") >= 1000L, 3L)
     TxLog.read(spark, path).count() shouldBe 400L

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.gold.ZOrder
@@ -65,29 +66,35 @@ class ZOrderSpec extends SparkSpecBase {
     ZOrder.writeZOrdered(rows.toDF("a", "b").repartition(8),
       Seq($"a", $"b"), bits = 6, numFiles = 16, path = dir)
 
-    val stats = gold.StatsIndex.build(spark, dir, Seq("a", "b"))
-    stats.count() shouldBe 16L // one row per file
+    gold.StatsIndex.build(spark, dir, Seq("a", "b")).count() shouldBe 16L // one row per file
+    gold.StatsIndex.write(spark, dir, Seq("a", "b"))
 
-    // a narrow predicate on EITHER z-ordered dimension drops most files
-    val keptA = gold.StatsIndex.pruneFiles(stats, "a", 10, 12)
-    keptA.size should be < 16
-    val keptB = gold.StatsIndex.pruneFiles(stats, "b", 50, 55)
-    keptB.size should be < 16
+    // (files the scan read, its rows)
+    def scan(pred: org.apache.spark.sql.Column): (Int, Set[(Long, Long)]) = {
+      val df = spark.read.parquet(dir).filter(pred)
+      val out = df.select("a", "b").as[(Long, Long)].collect().toSet
+      val files = df.queryExecution.executedPlan.collect {
+        case f: FileSourceScanExec => f.selectedPartitions.totalNumberOfFiles.toInt
+      }
+      (files.sum, out)
+    }
 
-    // soundness: pruning + row filter equals the unpruned filtered read
-    val pruned = gold.StatsIndex.prunedRead(spark, stats, "a", 10, 12)
-      .filter($"a".between(10, 12))
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    val full = spark.read.parquet(dir)
-      .filter($"a".between(10, 12))
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    pruned shouldBe full
-    full.size shouldBe 3 * 64
+    // a narrow predicate on EITHER z-ordered dimension drops most files;
+    // pruning + row filter equals the unpruned filtered read
+    for ((pred, expect) <- Seq(
+        $"a".between(10, 12) -> rows.filter(r => r._1 >= 10 && r._1 <= 12),
+        $"b".between(50, 55) -> rows.filter(r => r._2 >= 50 && r._2 <= 55))) {
+      val (files, out) = scan(pred)
+      files should be < 16
+      out shouldBe expect.toSet
+    }
 
     // out-of-domain interval: zero files survive, empty result, schema kept
-    val none = gold.StatsIndex.prunedRead(spark, stats, "a", 1000, 2000)
-    none.count() shouldBe 0L
-    none.columns.sorted shouldBe Array("a", "b")
+    val (files, out) = scan($"a".between(1000, 2000))
+    files shouldBe 0
+    out shouldBe empty
+    spark.read.parquet(dir).filter($"a".between(1000, 2000))
+      .columns.sorted shouldBe Array("a", "b")
   }
 
   test("writeZOrdered round-trips the data unchanged") {
