@@ -92,15 +92,13 @@ object DvSidecars {
   }
 
   /** Read one sidecar parquet (columns `file`, `row_idx`) via parquet-mr
-    * — the same reader machinery the checkpoint parser uses, so no Spark
-    * job and no driver round-trip; runs wherever the probe runs.
+    * — the checkpoint parser's local-file reader, so no Spark job, no
+    * driver round-trip and no Hadoop Configuration; runs wherever the
+    * probe runs.
     */
   private def load(fullPath: String): Map[String, Array[Long]] = {
     loads.incrementAndGet()
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(fullPath))
-      .build()
+    val reader = graft.gold.TxLog.localParquetReader(new java.io.File(fullPath))
     try {
       val acc = new java.util.HashMap[String, LongVec]()
       var g = reader.read()

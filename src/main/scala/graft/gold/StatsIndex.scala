@@ -1,6 +1,6 @@
 package graft.gold
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
@@ -95,16 +95,25 @@ object StatsIndex {
     val bounds =
       if (hit != null && hit._1 == fingerprint) hit._2
       else {
-        val loaded = load(spark, dir)
+        val loaded = load(spark, listing)
         cache.put(dir.toString, (fingerprint, loaded))
         loaded
       }
     Some(new SidecarFileIndex(index, bounds))
   }
 
-  private def load(spark: SparkSession, dir: Path): FileBounds = {
+  /** The sidecar's bounds, read from the part files of its `listing`.
+    * Reading the `_graft_stats` directory itself would make Spark warn
+    * that its (underscore-hidden) path was ignored.
+    */
+  private def load(spark: SparkSession,
+      listing: Array[FileStatus]): FileBounds = {
     import StatsPruning.{BV, BvLong, BvStr}
-    val df = spark.read.parquet(dir.toString)
+    val parts = listing.map(_.getPath).filter { p =>
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    }.map(_.toString)
+    if (parts.isEmpty) return Map.empty
+    val df = spark.read.parquet(parts.toIndexedSeq: _*)
     val indexedCols = df.schema.fieldNames.filter(_.endsWith("_min"))
       .map(_.dropRight(4))
       .filter(c => df.schema.fieldNames.contains(s"${c}_max"))

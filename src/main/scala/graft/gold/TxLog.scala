@@ -732,13 +732,41 @@ object TxLog {
   //     and the active DV sidecar.
   //
   // Written driver-side via parquet-mr's example Group API over
-  // LocalOutputFile (no Hadoop FS, no .crc litter), staged + ATOMIC_MOVE
-  // like every checkpoint; any read failure returns None (advisory
-  // checkpoints degrade to a longer replay, the load-bearing vacuum kind
-  // surfaces as the named missing-version error — proven by the
-  // corruption property fuzz). A READABLE checkpoint whose meta row lacks
+  // LocalOutputFile (no Hadoop FS or Configuration, no .crc litter),
+  // staged + ATOMIC_MOVE like every checkpoint; any read failure
+  // returns None (advisory checkpoints degrade to a longer replay, the
+  // load-bearing vacuum kind surfaces as the named missing-version error
+  // — proven by the corruption property fuzz). A READABLE checkpoint whose meta row lacks
   // the [[LogProtocol]] stamp is not corruption but an older log format:
   // it is refused with [[OlderLogFormatException]], never skipped.
+
+  // Every parquet-mr call the log makes (checkpoint write and read, the
+  // footer stats of a commit's staged files, DV sidecar footers and
+  // loads) goes through parquet-mr's local-file API with a
+  // PlainParquetConfiguration: no Hadoop FileSystem and no Hadoop
+  // Configuration. A fresh Configuration re-parses core-default.xml and
+  // searches the whole classpath for core-site.xml, ~11 ms a call on a
+  // C1 JVM over Spark's jars — more than reading a small checkpoint.
+
+  /** A parquet-mr Group reader over the local parquet file `f`. */
+  private[graft] def localParquetReader(f: java.io.File)
+      : org.apache.parquet.hadoop.ParquetReader[org.apache.parquet.example.data.Group] =
+    new org.apache.parquet.hadoop.ParquetReader.Builder[org.apache.parquet.example.data.Group](
+        new org.apache.parquet.io.LocalInputFile(f.toPath),
+        new org.apache.parquet.conf.PlainParquetConfiguration()) {
+      override protected def getReadSupport() =
+        new org.apache.parquet.hadoop.example.GroupReadSupport()
+    }.build()
+
+  /** The footer of the local parquet file `f`. */
+  private[graft] def localParquetFooter(f: java.io.File)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(f.toPath),
+      org.apache.parquet.ParquetReadOptions.builder(
+        new org.apache.parquet.conf.PlainParquetConfiguration()).build())
+    try r.getFooter finally r.close()
+  }
 
   private val CheckpointMessageType =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
@@ -769,6 +797,7 @@ object TxLog {
     try {
       val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
         .builder(new org.apache.parquet.io.LocalOutputFile(tmp))
+        .withConf(new org.apache.parquet.conf.PlainParquetConfiguration())
         .withType(CheckpointMessageType)
         .withCompressionCodec(
           org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
@@ -824,10 +853,7 @@ object TxLog {
       val f = checkpointParquetVersionFile(path, v)
       if (!f.exists()) None
       else {
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            new org.apache.hadoop.fs.Path(f.getPath))
-          .build()
+        val reader = localParquetReader(f)
         try {
           val files = Seq.newBuilder[String]
           var stats = Map.empty[String, FileStats]
@@ -1188,16 +1214,13 @@ object TxLog {
     com.google.common.cache.CacheBuilder.newBuilder()
       .maximumSize(65536).build[String, java.lang.Long]()
 
-  private def sidecarRowCount(path: String, dvFile: String): Long = {
+  private[graft] def sidecarRowCount(path: String, dvFile: String): Long = {
     val key = s"$path/$dvFile"
     val cached = sidecarRowsCache.getIfPresent(key)
     if (cached != null) cached.longValue()
     else {
       // two threads may both read one footer; the file is immutable
-      val md = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        new org.apache.hadoop.conf.Configuration(),
-        new org.apache.hadoop.fs.Path(key),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      val md = localParquetFooter(new java.io.File(key))
       val blocks = md.getBlocks
       var i = 0; var n = 0L
       while (i < blocks.size()) { n += blocks.get(i).getRowCount; i += 1 }
@@ -1901,11 +1924,8 @@ object TxLog {
     if (statsFooterDisabled.get()) return None
     import scala.jdk.CollectionConverters._
     try {
-      val conf = new org.apache.hadoop.conf.Configuration()
       def one(f: java.io.File): (String, FileStats) = {
-        val md = org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf,
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+        val md = localParquetFooter(f)
         val blocks = md.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
         val n = eligible.size

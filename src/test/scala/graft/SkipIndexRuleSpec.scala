@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * predicate shape the rule understands and for ones it must ignore;
   * (3) a STALE sidecar costs skipping, never rows: a file appended after
   * the build is read, a listed file since deleted is not; (4) a rebuilt
-  * index invalidates the driver-side stats cache.
+  * index invalidates the driver-side stats cache; (5) loading a sidecar
+  * logs no Spark warning.
   */
 class SkipIndexRuleSpec extends SparkSpecBase {
   import spark.implicits._
@@ -47,6 +48,40 @@ class SkipIndexRuleSpec extends SparkSpecBase {
     src.toFile.listFiles().filter(_.isFile).foreach(f =>
       java.nio.file.Files.copy(f.toPath, dst.resolve(f.getName)))
     dst.toString
+  }
+
+  /** `body`'s result and the messages Spark's `DataSource` logged at WARN
+    * or above while it ran.
+    */
+  private def withDataSourceWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(
+      classOf[org.apache.spark.sql.execution.datasources.DataSource].getName)
+      .asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("dataSourceWarnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    val out = try body finally { logger.removeAppender(appender); appender.stop() }
+    (out, seen.toArray(Array.empty[String]).toSeq)
+  }
+
+  test("loading the sidecar logs no ignored-path warning") {
+    val path = java.nio.file.Files.createTempDirectory("skipidx-log").toString + "/t"
+    writeTable(path)
+    val (counts, warnings) = withDataSourceWarnings(
+      scanFileCounts(spark.read.parquet(path).filter(col("k") <= 99L)))
+    counts should not be empty
+    counts.foreach(_ should be < 8)
+    warnings.filter(_.contains("ignored")) shouldBe empty
   }
 
   test("rule prunes the scan and stays oracle-identical across predicate shapes") {
