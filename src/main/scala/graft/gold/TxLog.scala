@@ -781,6 +781,13 @@ object TxLog {
         |  optional binary meta (UTF8);
         |}""".stripMargin)
 
+  /** [[CheckpointMessageType]] as Spark types it: [[checkpointFilesDf]]
+    * reads with it instead of inferring it from the footer (a job). */
+  private[graft] val CheckpointSparkSchema = new StructType()
+    .add("kind", "string", nullable = false).add("file", "string")
+    .add("rows", "long").add("bytes", "long").add("cols", "string")
+    .add("parts", "string").add("dv", "string").add("meta", "string")
+
   /** Atomically (re)write the checkpoint of `snap` — deterministic
     * content for a given version, so REPLACE is idempotent. Carries the
     * snapshot's FULL state: files, schema, txn watermarks, constraints,
@@ -909,7 +916,8 @@ object TxLog {
     require(f.isFile,
       s"TxLog: no parquet checkpoint at version $v of $path (have " +
         s"checkpoints at: ${listCheckpointVersions(path).mkString(", ")})")
-    spark.read.parquet(f.getPath).filter(col("kind") === "file")
+    spark.read.schema(CheckpointSparkSchema).parquet(f.getPath)
+      .filter(col("kind") === "file")
       .select("file", "rows", "bytes", "cols", "parts", "dv")
   }
 
@@ -1147,15 +1155,19 @@ object TxLog {
   private[graft] val MetaFileCol = "__graft_file"
   private[graft] val MetaRiCol = "__graft_ri"
 
+  /** The columns of every DV file ([[writeDvFile]]). */
+  private[graft] val DvFileSchema = new StructType().add("file", "string").add("row_idx", "long")
+
   /** The (file, row_idx) DELETED-row set of `active` (data file → DV
     * file), as a DataFrame — each DV parquet is filtered to ONLY the data
     * files whose CURRENT mapping points at it, so superseded entries in a
-    * shared DV file never apply.
+    * shared DV file never apply. Read with [[DvFileSchema]], not inferred:
+    * an inference is one job per DV file.
     */
   private def dvRowsDf(spark: SparkSession, path: String,
       active: Map[String, String]): DataFrame =
     active.groupBy(_._2).map { case (dvf, entries) =>
-      spark.read.parquet(s"$path/$dvf")
+      spark.read.schema(DvFileSchema).parquet(s"$path/$dvf")
         .filter(col("file").isInCollection(entries.keys.toSeq))
     }.reduce(_.unionAll(_))
       .select(col("file").as(DvFileCol), col("row_idx").as(DvRiCol))

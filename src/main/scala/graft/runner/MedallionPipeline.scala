@@ -2,6 +2,7 @@ package graft.runner
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.bronze.{BronzeIngest, Validation}
 import graft.gold.{BucketedLayout, DataQuality, DimDate, Scd2, SurrogateKeys}
@@ -19,6 +20,17 @@ import graft.silver.{Dedup, Enrich, Tags}
   * path layout (`bronze|silver|gold/<table>/run_date=<d>`); facts are
   * partitioned by run_date with dynamic overwrite for idempotent re-runs
   * (requirements/...:40, 143).
+  *
+  * The writer is the schema authority for every layer read: each write
+  * records the schema of the DataFrame it wrote, and each read of a layer
+  * table passes that schema to `spark.read.schema(..)` instead of
+  * inferring it from the parquet footers (an inference is one Spark job
+  * per read, 26 per run). A partitioned fact records its data columns
+  * only, so partition discovery types `run_date` as it would for any
+  * reader. A read whose writer did not run in this instance fails with
+  * `read of <path> before its writer ran`: every read follows its writer
+  * through a DAG dependency, so the error names a missing dependency that
+  * would otherwise read a stale table left by an earlier run.
   *
   * Determinism: `runDate` + `ingestTs` + `pipelineRunId` are injected,
   * never generated inline (SURVEY §7.4.3).
@@ -43,11 +55,31 @@ final case class MedallionPipeline(
   private def silverPath(table: String)  = s"$outDir/silver/$table/run_date=$runDate"
   private def goldPath(table: String)    = s"$outDir/gold/$table"
 
-  private def write(df: DataFrame, path: String, coalesceTo: Int = 1): Unit =
-    df.coalesce(coalesceTo).write.mode("overwrite").parquet(path)
+  /** The schema each layer table was written with, by path (see the class
+    * doc); the DAG's parallel tasks write it concurrently. */
+  private val written = scala.collection.concurrent.TrieMap.empty[String, StructType]
 
-  private def readBronze(table: String) = spark.read.parquet(bronzePath(table))
-  private def readSilver(table: String) = spark.read.parquet(silverPath(table))
+  private def write(df: DataFrame, path: String, coalesceTo: Int = 1): Unit = {
+    df.coalesce(coalesceTo).write.mode("overwrite").parquet(path)
+    written(path) = df.schema
+  }
+
+  /** A gold fact, partitioned by `run_date`: its data columns are recorded,
+    * and the read discovers `run_date` from the directory names. */
+  private def writeFact(fact: DataFrame, table: String): Unit = {
+    fact.write.mode("overwrite").partitionBy("run_date").parquet(goldPath(table))
+    written(goldPath(table)) = StructType(fact.schema.filterNot(_.name == "run_date"))
+  }
+
+  private[graft] def read(path: String): DataFrame = {
+    val schema = written.getOrElse(path,
+      throw new IllegalStateException(s"read of $path before its writer ran"))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private def readBronze(table: String) = read(bronzePath(table))
+  private def readSilver(table: String) = read(silverPath(table))
+  private def readGold(table: String) = read(goldPath(table))
 
   // -------------------------------------------------------------------------
   // Bronze: contract read → validate split → circuit breaker → write both
@@ -57,19 +89,25 @@ final case class MedallionPipeline(
 
   private def rawPath(c: Contracts.TableContract): String = s"$rawDir/${c.name}.csv"
 
-  /** S11 — source-availability precondition (reference
-    * Meta_Guideline.md:1421-1454, 3932-3966): every contract's raw file
-    * must exist before ANY bronze work starts; fail fast with the full
-    * missing list, not on the first table mid-run. Existence goes through
-    * the Hadoop FileSystem so the precheck agrees with the actual read
-    * (s3a/hdfs/file URIs, not just local paths).
+  /** The raw files of `Contracts.all` that do not exist yet. Existence
+    * goes through the Hadoop FileSystem so the check agrees with the
+    * actual read (s3a/hdfs/file URIs, not just local paths).
     */
-  private def checkSourcesAvailable(): Unit = {
+  private def missingSources(): Seq[String] = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val missing = Contracts.all.map(rawPath).filterNot { p =>
+    Contracts.all.map(rawPath).filterNot { p =>
       val path = new org.apache.hadoop.fs.Path(p)
       path.getFileSystem(hadoopConf).exists(path)
     }
+  }
+
+  /** S11 — source-availability precondition (reference
+    * Meta_Guideline.md:1421-1454, 3932-3966): every contract's raw file
+    * must exist before ANY bronze work starts; fail fast with the full
+    * missing list, not on the first table mid-run.
+    */
+  private def checkSourcesAvailable(): Unit = {
+    val missing = missingSources()
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"source availability check failed; missing: ${missing.mkString(", ")}")
@@ -85,16 +123,11 @@ final case class MedallionPipeline(
     */
   private[graft] def waitForSources(timeoutMs: Long, pollMs: Long = 500L,
       clock: () => Long = () => System.nanoTime() / 1000000L): Unit = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    def missing: Seq[String] = Contracts.all.map(rawPath).filterNot { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(hadoopConf).exists(path)
-    }
     val deadline = clock() + timeoutMs
-    var m = missing
+    var m = missingSources()
     while (m.nonEmpty && clock() < deadline) {
       Thread.sleep(math.min(pollMs, math.max(1L, deadline - clock())))
-      m = missing
+      m = missingSources()
     }
     if (m.nonEmpty)
       throw new java.util.concurrent.TimeoutException(
@@ -274,9 +307,9 @@ final case class MedallionPipeline(
     */
   private def goldBridgeDatasetTag(): Unit = {
     val tags = readSilver("tags").select("dataset_id", "tag")
-    val dsDim = spark.read.parquet(goldPath("dim_dataset"))
+    val dsDim = readGold("dim_dataset")
       .filter(col("is_current")).select("dataset_id", "dataset_sk")
-    val tagDim = spark.read.parquet(goldPath("dim_tag")).select("tag", "tag_sk")
+    val tagDim = readGold("dim_tag").select("tag", "tag_sk")
     val bridge = tags
       .join(dsDim, Seq("dataset_id"))
       .join(tagDim, Seq("tag"))
@@ -302,8 +335,7 @@ final case class MedallionPipeline(
         avg(col("prize_money")).as("avg_prize"))
       .withColumn("run_date", lit(runDate))
       .withColumn("pipeline_run_id", lit(pipelineRunId))
-    fact.write.mode("overwrite").partitionBy("run_date")
-      .parquet(goldPath("fact_competitions_yearly"))
+    writeFact(fact, "fact_competitions_yearly")
   }
 
   /** fact_tag_usage_daily: per tag usage vs newly-created usage; invariant
@@ -323,8 +355,7 @@ final case class MedallionPipeline(
           .otherwise(0L)).as("new_usage_count"))
       .withColumn("run_date", lit(runDate))
       .withColumn("pipeline_run_id", lit(pipelineRunId))
-    fact.write.mode("overwrite").partitionBy("run_date")
-      .parquet(goldPath("fact_tag_usage_daily"))
+    writeFact(fact, "fact_tag_usage_daily")
   }
 
   private def goldFactDatasetOwnerDaily(): Unit = {
@@ -336,15 +367,14 @@ final case class MedallionPipeline(
         .as("public_datasets_count"),
       sum(coalesce(col("total_views"), lit(0L))).as("total_views"),
       sum(coalesce(col("total_downloads"), lit(0L))).as("total_downloads"))
-    val dim = spark.read.parquet(goldPath("dim_user"))
+    val dim = readGold("dim_user")
       .filter(col("is_current"))
       .select(col("user_id").as("owner_user_id"), col("user_sk"))
     val fact = Enrich.lookupSk(daily, dim, "owner_user_id", "user_sk")
       .withColumn("date_sk", lit(runDate.replace("-", "")).cast("int"))
       .withColumn("run_date", lit(runDate))
       .withColumn("pipeline_run_id", lit(pipelineRunId))
-    fact.write.mode("overwrite").partitionBy("run_date")
-      .parquet(goldPath("fact_dataset_owner_daily"))
+    writeFact(fact, "fact_dataset_owner_daily")
   }
 
   /** All seven gold DQ gates evaluated in ONE Spark action: each check's
@@ -355,13 +385,13 @@ final case class MedallionPipeline(
     * still run in parallel inside the job.
     */
   private def goldValidate(): Unit = {
-    val fact = spark.read.parquet(goldPath("fact_dataset_owner_daily"))
-    val dim  = spark.read.parquet(goldPath("dim_user"))
-    val compYearly = spark.read.parquet(goldPath("fact_competitions_yearly"))
-    val tagUsage = spark.read.parquet(goldPath("fact_tag_usage_daily"))
-    val bridge = spark.read.parquet(goldPath("bridge_dataset_tag"))
-    val dsDim  = spark.read.parquet(goldPath("dim_dataset"))
-    val tagDim = spark.read.parquet(goldPath("dim_tag"))
+    val fact = readGold("fact_dataset_owner_daily")
+    val dim  = readGold("dim_user")
+    val compYearly = readGold("fact_competitions_yearly")
+    val tagUsage = readGold("fact_tag_usage_daily")
+    val bridge = readGold("bridge_dataset_tag")
+    val dsDim  = readGold("dim_dataset")
+    val tagDim = readGold("dim_tag")
 
     val checks: Seq[(String, DataFrame)] = Seq(
       "total = private + public" -> DataQuality.violations(fact,
@@ -398,10 +428,10 @@ final case class MedallionPipeline(
     * this is an additive optimization for repeated-join serving workloads.
     */
   private def goldPublishServing(): Unit = {
-    BucketedLayout.publish(spark.read.parquet(goldPath("dim_user")),
+    BucketedLayout.publish(readGold("dim_user"),
       "serving_dim_user", "user_sk", servingBuckets)
     BucketedLayout.publish(
-      spark.read.parquet(goldPath("fact_dataset_owner_daily")),
+      readGold("fact_dataset_owner_daily"),
       "serving_fact_dataset_owner_daily", "user_sk", servingBuckets)
   }
 

@@ -141,6 +141,68 @@ class MedallionPipelineSpec extends SparkSpecBase {
     rep.getAs[Double]("overall_rejection_rate") should (be >= 0.0 and be <= 0.7)
   }
 
+  test("layer reads take the writer's schema: no inference job, equal to inference") {
+    val raw = Files.createTempDirectory("graft_raw_schema").toString
+    val out = Files.createTempDirectory("graft_out_schema").toString
+    writeFixtures(raw)
+    val p = MedallionPipeline(spark, raw, out, runDate = "2024-06-01",
+      ingestTs = "2024-06-01 02:00:00", pipelineRunId = "schema-run",
+      maxRejectRate = 0.7)
+    var report: Pipeline.Report = null
+    val jobs = jobsStarted { report = p.run() }
+    withClue(report.toString + "\n") { report.succeeded shouldBe true }
+    jobs should not be empty
+    // the pipeline wrote every table it reads, so none is inferred
+    parquetInferenceSites(jobs) shouldBe empty
+
+    // each table read with its recorded schema is typed exactly as a fresh
+    // inference types it: nullability, field metadata, and the facts'
+    // discovered run_date partition column
+    val layered = Seq("bronze", "_rejects", "silver").flatMap(layer =>
+      Seq("users", "datasets", "competitions", "tags", "kernels")
+        .map(t => s"$out/$layer/$t/run_date=2024-06-01"))
+    val gold = Seq("dim_user", "dim_date", "dim_dataset", "dim_competition",
+      "dim_tag", "bridge_dataset_tag", "fact_competitions_yearly",
+      "fact_tag_usage_daily", "fact_dataset_owner_daily").map(t => s"$out/gold/$t")
+    (layered ++ gold).foreach { path =>
+      val recorded = p.read(path).schema
+      val inferred = spark.read.parquet(path).schema
+      withClue(s"$path\n") {
+        recorded shouldBe inferred
+        recorded.map(_.metadata) shouldBe inferred.map(_.metadata)
+      }
+    }
+    Seq("fact_competitions_yearly", "fact_tag_usage_daily", "fact_dataset_owner_daily")
+      .foreach { t =>
+        p.read(s"$out/gold/$t").schema.last shouldBe
+          org.apache.spark.sql.types.StructField("run_date",
+            org.apache.spark.sql.types.DateType)
+      }
+  }
+
+  test("a layer read before its writer ran fails named and reads nothing") {
+    val raw = Files.createTempDirectory("graft_raw_order").toString
+    val out = Files.createTempDirectory("graft_out_order").toString
+    writeFixtures(raw)
+    def pipeline(id: String) = MedallionPipeline(spark, raw, out,
+      runDate = "2024-06-01", ingestTs = "2024-06-01 02:00:00",
+      pipelineRunId = id, maxRejectRate = 0.7)
+    pipeline("earlier-run").run().succeeded shouldBe true
+    // a fresh run whose task lost its writer: the earlier run's tables are
+    // on disk, and must not be read in place of this run's
+    val fresh = pipeline("fresh-run").tasks.map(t => t.name -> t).toMap
+    Seq("silver_users" -> s"$out/bronze/users/run_date=2024-06-01",
+      "gold_validate" -> s"$out/gold/fact_dataset_owner_daily").foreach {
+      case (task, firstRead) =>
+        var err: Throwable = null
+        val jobs = jobsStarted {
+          err = intercept[IllegalStateException](fresh(task).body())
+        }
+        err.getMessage shouldBe s"read of $firstRead before its writer ran"
+        jobs shouldBe empty
+    }
+  }
+
   /** Runs `body`, returning whether it succeeded and how many classes
     * Janino compiled meanwhile. */
   private def compiling(body: => Boolean): (Boolean, Long) = {

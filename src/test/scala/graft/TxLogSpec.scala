@@ -611,6 +611,43 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.read(spark, path, asOf = Some(10L)).count() shouldBe 160L
   }
 
+  test("checkpoint and DV-file reads take their fixed schema: equal to inference, no inference job") {
+    val path = freshPath()
+    TxLog.init(rows(0 until 80).repartition(3), path) // v0
+    (0 until 7).foreach { i =>
+      TxLog.append(rows(100 + i * 10 until 110 + i * 10), path, i.toLong)
+    } // v1-v7
+    TxLog.deleteWhereDV(spark, path, col("id") < 10L, 7L) // v8
+    // a second vector on the same files carries the first one's rows over
+    TxLog.deleteWhereDV(spark, path, col("id") % 10 === 5L, 8L) // v9
+    TxLog.updateWhereDV(spark, path, col("id") === 20L,
+      Map("payload" -> lit("u")), 9L) // v10, checkpointed
+    val ckpt = new java.io.File(new java.io.File(path, TxLog.LogDirName),
+      f"${10L}%020d.checkpoint.parquet").getPath
+    val dvs = new java.io.File(path).listFiles().map(_.getName)
+      .filter(_.startsWith("dv-")).map(f => s"$path/$f")
+    dvs.length should be >= 3
+    (Seq(ckpt -> TxLog.CheckpointSparkSchema) ++ dvs.map(_ -> TxLog.DvFileSchema))
+      .foreach { case (file, schema) =>
+        val given = spark.read.schema(schema).parquet(file).schema
+        val inferred = spark.read.parquet(file).schema
+        withClue(s"$file\n") {
+          given shouldBe inferred
+          given.map(_.metadata) shouldBe inferred.map(_.metadata)
+        }
+      }
+    val expected = (0L until 80L) ++ (100L until 170L)
+    var read: Array[Long] = null
+    var ckptFiles = 0L
+    val jobs = jobsStarted {
+      read = TxLog.read(spark, path).select("id").as[Long].collect() // DV apply
+      ckptFiles = TxLog.checkpointFilesDf(spark, path, 10L).count()
+    }
+    read.sorted.toSeq shouldBe expected.filterNot(i => i < 10L || i % 10 == 5L)
+    ckptFiles shouldBe TxLog.snapshot(path).files.size.toLong
+    parquetInferenceSites(jobs) shouldBe empty
+  }
+
   test("racing readers only ever see complete committed states, under both primitives") {
     Seq(TxLog.CommitPrimitive.HardLink, TxLog.CommitPrimitive.CreateWrite)
       .foreach { prim =>
