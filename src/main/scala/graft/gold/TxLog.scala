@@ -1546,7 +1546,8 @@ object TxLog {
       m.foreach { cur =>
         val ckpt = new java.io.File(work, f"v$w%020d")
         cur.write.mode("overwrite").parquet(ckpt.getPath)
-        mirror = Some(spark.read.parquet(ckpt.getPath))
+        // the schema it was just written with: no inference job
+        mirror = Some(spark.read.schema(cur.schema).parquet(ckpt.getPath))
         // the previous checkpoint was fully consumed by the write above
         prevCkpt.foreach(graft.core.Fs.rmTree)
         prevCkpt = Some(ckpt)

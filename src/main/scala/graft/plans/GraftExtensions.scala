@@ -281,7 +281,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // seam evidence) plus a delegating parser for the two constraint DDL
     // statements the analyzer refuses before any injectable rule runs
     e.injectPostHocResolutionRule(session => RewriteTxLogDml(session))
-    e.injectParser((_, delegate) => new GraftSqlParser(delegate))
+    // the parser is built once per session state, child sessions too:
+    // the one per-session hook, so the Hadoop conf is made lean here
+    e.injectParser { (session, delegate) =>
+      graft.core.GraftSession.dropPropertySources(session.sparkContext)
+      new GraftSqlParser(delegate)
+    }
     SqlFunctions.install(e)
   }
 }

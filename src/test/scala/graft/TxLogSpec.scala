@@ -648,6 +648,36 @@ class TxLogSpec extends SparkSpecBase {
     parquetInferenceSites(jobs) shouldBe empty
   }
 
+  test("mergeByKeyFromChanges reads each mirror checkpoint with its written schema: equal to inference, no inference job") {
+    import org.apache.spark.sql.types.{LongType, MetadataBuilder}
+    val path = freshPath()
+    val noted = new MetadataBuilder().putString("comment", "kept").build()
+    TxLog.init(rows(0 until 60).withColumn("payload", col("payload").as("payload", noted))
+      .repartition(2), path)                                              // v0: grp int
+    TxLog.deleteWhere(spark, path, col("id") % 4 === 1L, 0L)              // v1
+    TxLog.append(rows(100 until 120).withColumn("grp", col("grp").cast("long")),
+      path, 1L)                                                           // v2: grp bigint
+    Seq(1L, 2L).foreach { v =>
+      val work = java.nio.file.Files.createTempDirectory("cdfmerge").toFile
+      var merged: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsStarted {
+        merged = TxLog.mergeByKeyFromChanges(spark, path, Seq("id"), Some(v),
+          Some(work.getPath))
+      }
+      withClue(s"version $v: ") {
+        parquetInferenceSites(jobs) shouldBe empty
+        val last = work.listFiles().map(_.getPath).filter(_.contains("/v")).max
+        val inferred = spark.read.parquet(last).schema
+        merged.schema shouldBe inferred // field metadata and nullability too
+        merged.schema("payload").metadata shouldBe noted
+        if (v == 2L) merged.schema("grp").dataType shouldBe LongType
+        def ids(df: org.apache.spark.sql.DataFrame) =
+          df.select("id").as[Long].collect().sorted.toSeq
+        ids(merged) shouldBe ids(TxLog.read(spark, path, Some(v)))
+      }
+    }
+  }
+
   test("racing readers only ever see complete committed states, under both primitives") {
     Seq(TxLog.CommitPrimitive.HardLink, TxLog.CommitPrimitive.CreateWrite)
       .foreach { prim =>
